@@ -9,10 +9,19 @@ import graft.functions.exact
 
 /** Correctness-gate entry for the ML path (SURVEY §2.6 M1/M2).
   *
-  * The K-Means fit itself is engine-internal (init sampling, iteration
-  * order) and stays spec-bounded (WeightedKMeansSpec pins cross-mode WSSSE
-  * tolerance). What IS deterministic — and what this query pins against
-  * the DuckDB oracle — is the fit input and the centroid arithmetic:
+  * The K-Means fit itself runs on the driver ([[WeightedKMeans.run]]):
+  * one Spark job collects the window's `(lat, lon, weight)` rows, which
+  * is bounded by the fleet because the pipeline trains on one drop (the
+  * enriched `default/` folder is overwritten each run, and the window
+  * keeps its trailing 90 minutes). The solve is seeded greedy k-means++
+  * init (best of `2 + ⌊ln k⌋` D²·w-drawn candidates per center) and
+  * weighted Lloyd under MLlib's defaults (at most 20 iterations, stop
+  * once every center moves ≤ 1e-4, empty clusters keep their center).
+  * Its init sampling makes the centers engine-internal, so the fit stays
+  * spec-bounded: WeightedKMeansSpec pins the cross-mode WSSSE tolerance
+  * and the objective against MLlib's own weighted fit. What IS
+  * deterministic — and what this query pins against the DuckDB oracle —
+  * is the fit input and the centroid arithmetic:
   * [[WeightedKMeans.prepare]]'s window filter + weight clamp, and the
   * per-group weighted mean sum(w·x)/sum(w), which is exactly the centroid
   * update step K-Means computes (k=1 per provider group).

@@ -36,24 +36,36 @@ object BikePipeline {
 
   final case class RetryPolicy(retries: Int = 2, delay: FiniteDuration = 5.minutes)
 
-  final case class StepReport(name: String, attempts: Int, output: String)
+  /** One DAG step's outcome: attempts made, the step's output, and
+    * `millis`, the wall time across all attempts (retry delays included). */
+  final case class StepReport(name: String, attempts: Int, output: String,
+                              millis: Long)
 
   final case class PipelineReport(steps: Seq[StepReport],
                                   servedCount: Option[Long],
                                   kmeansRows: Long)
 
-  /** Per-step retry wrapper (O1). [[WeightedKMeans.EmptyWindowException]]
-    * is deterministic — retrying cannot help — so it propagates
-    * immediately. */
+  /** A step's value plus how it ran. */
+  private final case class Ran[T](name: String, value: T, attempts: Int,
+                                  millis: Long) {
+    def report(output: String): StepReport =
+      StepReport(name, attempts, output, millis)
+  }
+
+  /** Per-step retry wrapper (O1), timing all attempts.
+    * [[WeightedKMeans.WindowTooLargeException]] is deterministic —
+    * retrying cannot help — so it propagates immediately. */
   private def withRetry[T](name: String, policy: RetryPolicy)
-                          (body: => T): (T, Int) = {
+                          (body: => T): Ran[T] = {
+    val t0 = System.nanoTime()
     var attempt = 0
     var last: Option[Throwable] = None
     while (attempt <= policy.retries) {
       attempt += 1
       Try(body) match {
-        case Success(v) => return (v, attempt)
-        case Failure(e: WeightedKMeans.EmptyWindowException) => throw e
+        case Success(v) =>
+          return Ran(name, v, attempt, (System.nanoTime() - t0) / 1000000L)
+        case Failure(e: WeightedKMeans.WindowTooLargeException) => throw e
         case Failure(e) =>
           last = Some(e)
           System.err.println(s"[pipeline] step $name attempt $attempt failed: " +
@@ -78,14 +90,13 @@ object BikePipeline {
     // O2 fan-out: ingest→transform per feed, in parallel.
     def branch(feed: Feed, transform: (SparkSession, String, String) => String,
                stepName: String): Future[Seq[StepReport]] = Future {
-      val (drop, a1) = withRetry(s"fetch_$stepName", retry) {
+      val drop = withRetry(s"fetch_$stepName", retry) {
         Ingest.fetchStore(client, feed, lakeRoot, clock)
       }
-      val (formatted, a2) = withRetry(s"transform_$stepName", retry) {
-        transform(spark, drop, lakeRoot)
+      val formatted = withRetry(s"transform_$stepName", retry) {
+        transform(spark, drop.value, lakeRoot)
       }
-      Seq(StepReport(s"fetch_$stepName", a1, drop),
-        StepReport(s"transform_$stepName", a2, formatted))
+      Seq(drop.report(drop.value), formatted.report(formatted.value))
     }
 
     val branches = Future.sequence(Seq(
@@ -101,7 +112,7 @@ object BikePipeline {
       "lime" -> branchReports.find(_.name == "transform_lime").get.output)
 
     // Enriched stage + quality gate (replaces dbt_run >> dbt_test).
-    val (enrichedPath, aEnr) = withRetry("enriched_stage", retry) {
+    val enrichedPath = withRetry("enriched_stage", retry) {
       Enriched.runStage(
         spark.read.parquet(formattedPath("ss")),
         spark.read.parquet(formattedPath("si")),
@@ -111,19 +122,19 @@ object BikePipeline {
 
     // Serving (index_to_elastic analog; parquet sink by default offline).
     val sink = servingSink.getOrElse(ParquetSink(s"$lakeRoot/serving/all_bike_data"))
-    val (served, aServe) = withRetry("index_to_serving", retry) {
+    val served = withRetry("index_to_serving", retry) {
       Serving.indexJob(spark, lakeRoot, sink)
     }
 
     // Weighted K-Means over the trailing 90 minutes (P4 window). An empty
     // window is a normal condition (a quiet feed, a re-run long after the
     // drop) — skip the step instead of burning retries on it.
-    val ((kmeansRows, usagePath), aKm) =
-      try withRetry("k_means", retry) {
-        val end = Timestamp.from(clock.instant())
-        val start = Timestamp.from(clock.instant().minusSeconds(90 * 60))
-        val enriched = spark.read.schema(graft.bike.BikeSchemas.enriched)
-          .parquet(enrichedPath)
+    val kmeans = withRetry("k_means", retry) {
+      val end = Timestamp.from(clock.instant())
+      val start = Timestamp.from(clock.instant().minusSeconds(90 * 60))
+      val enriched = spark.read.schema(graft.bike.BikeSchemas.enriched)
+        .parquet(enrichedPath.value)
+      try {
         val (result, _) = WeightedKMeans.run(enriched, start, end, kmeansParams)
         val out = s"$lakeRoot/usage/kmeans_results/"
         result.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
@@ -131,15 +142,17 @@ object BikePipeline {
       } catch {
         case e: WeightedKMeans.EmptyWindowException =>
           System.err.println(s"[pipeline] k_means skipped: ${e.getMessage}")
-          ((0L, "skipped: empty window"), 1)
+          (0L, "skipped: empty window")
       }
+    }
+    val (kmeansRows, usagePath) = kmeans.value
 
     PipelineReport(
       branchReports ++ Seq(
-        StepReport("enriched_stage", aEnr, enrichedPath),
-        StepReport("index_to_serving", aServe, served.map(_.toString).getOrElse("-")),
-        StepReport("k_means", aKm, usagePath)),
-      served, kmeansRows)
+        enrichedPath.report(enrichedPath.value),
+        served.report(served.value.map(_.toString).getOrElse("-")),
+        kmeans.report(usagePath)),
+      served.value, kmeansRows)
   }
 }
 
@@ -164,7 +177,8 @@ object PipelineCli {
     val spark = graft.core.GraftSession.local(appName = "graft-pipeline")
     val report = BikePipeline.run(spark, client, lakeRoot, clock)
     report.steps.foreach(s =>
-      println(f"[pipeline] ${s.name}%-20s attempts=${s.attempts} → ${s.output}"))
+      println(f"[pipeline] ${s.name}%-20s attempts=${s.attempts} " +
+        f"${s.millis}%6d ms → ${s.output}"))
     println(s"[pipeline] served=${report.servedCount} kmeansRows=${report.kmeansRows}")
     spark.stop()
   }

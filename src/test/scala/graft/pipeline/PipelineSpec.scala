@@ -81,6 +81,46 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
     new java.io.File(s"$lakeRoot/usage/kmeans_results").exists() shouldBe true
   }
 
+  test("step reports carry each step's wall time across its attempts") {
+    val delay = 100.millis
+    var siCalls = 0
+    val flakySi = new FeedClient {
+      def fetch(feed: Feed): Array[Byte] = {
+        if (feed == Feed.VelibSi) {
+          siCalls += 1
+          if (siCalls < 3) throw new RuntimeException("transient")
+        }
+        fixtureClient.fetch(feed)
+      }
+    }
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-ms").toString
+    val report = BikePipeline.run(spark, flakySi, lakeRoot, clock,
+      BikePipeline.RetryPolicy(retries = 2, delay = delay),
+      WeightedKMeans.Params(k = 3, seed = 1L))
+    val fetchSi = report.steps.find(_.name == "fetch_si").get
+    fetchSi.attempts shouldBe 3
+    // two failed attempts, each followed by the retry delay
+    fetchSi.millis should be >= 2 * delay.toMillis
+    all(report.steps.map(_.millis)) should be >= 0L
+    report.steps.find(_.name == "k_means").get.millis should be > 0L
+  }
+
+  test("an empty K-Means window skips the step: k_means reports " +
+    "'skipped: empty window' and kmeansRows = 0") {
+    // a day after the fixture drop: the trailing 90 minutes hold nothing
+    val nextDay = Clock.fixed(Instant.ofEpochSecond(1740000300L + 86400L),
+      ZoneOffset.UTC)
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val report = BikePipeline.run(spark, fixtureClient, lakeRoot, nextDay,
+      BikePipeline.RetryPolicy(retries = 0, delay = 0.millis),
+      WeightedKMeans.Params(k = 3, seed = 1L))
+    val km = report.steps.find(_.name == "k_means").get
+    km.output shouldBe "skipped: empty window"
+    km.attempts shouldBe 1
+    report.kmeansRows shouldBe 0L
+    report.servedCount shouldBe Some(12L)
+  }
+
   test("dated drops compose with hour partitioning: two pipeline runs " +
     "land as two p_hour partitions and a one-hour range reads only its " +
     "own drop") {
