@@ -1,6 +1,6 @@
 package graft.enriched
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.bike.Transforms
@@ -64,10 +64,10 @@ object Enriched {
     * so the serving layer never sees bad data. Returns the output path.
     */
   /** The shared gate-then-write harness of both stage variants: build
-    * the enriched union ONCE (persisted — the gate runs two aggregate
-    * jobs and the write a third; without the persist the join/union
-    * plan executes three times AND the write could see different data
-    * than the gate approved), refuse on any violation, hand the
+    * the enriched union ONCE (persisted — the gate's one query and the
+    * write each scan it; without the persist the join/union plan
+    * executes twice AND the write could see different data than the
+    * gate approved), refuse on any violation, hand the
     * schema-enforced frame to the writer, unpersist in the same call so
     * nothing leaks into the session. */
   private def gatedStage[A](ss: DataFrame, si: DataFrame, lime: DataFrame)
@@ -116,10 +116,14 @@ object Enriched {
 }
 
 /** R4 — the dbt-test replacement: violation-count aggregations that gate
-  * the enriched write. All row-level checks compile into ONE aggregate
-  * pass (map-side partial counts, no wide shuffle); the uniqueness check
-  * is a second, key-shuffled pass — same cost shape as dbt's generic
-  * `unique` test.
+  * the enriched write, all in ONE query. The rows are grouped by the
+  * uniqueness key `(provider, id, time)` (null keys group together, as
+  * `groupBy` groups them); each group
+  * carries its row count and its count of each row-check violation, and
+  * one global aggregate sums the per-check counts and counts the groups
+  * holding more than one row. The key shuffle is the cost of the
+  * uniqueness check alone; the row checks ride along in its partial
+  * aggregates.
   */
 object QualityGate {
 
@@ -130,23 +134,31 @@ object QualityGate {
       "quality gate failed: " +
         failures.map(f => s"${f.name}=${f.violations}").mkString(", "))
 
-  /** All checks over the enriched contract. */
+  /** The row-level checks, in report order: a row violates a check when
+    * its predicate is true (a null predicate is no violation). */
+  private val rowChecks: Seq[(String, Column)] = Seq(
+    "provider_not_null" -> col("provider").isNull,
+    "id_not_null" -> col("id").isNull,
+    "provider_accepted_values" -> !col("provider").isin("velib", "lime"),
+    "geo_in_range" -> (col("lat") < -90.0 || col("lat") > 90.0 ||
+      col("lon") < -180.0 || col("lon") > 180.0),
+    "counts_non_negative" -> (col("num_bikes") < 0 || col("num_docks") < 0))
+
+  /** All checks over the enriched contract: the row checks, then
+    * `provider_id_time_unique` (the number of keys held by more than one
+    * row). */
   def checks(enriched: DataFrame): Seq[CheckResult] = {
-    val row = enriched.agg(
-      count(when(col("provider").isNull, 1)).as("provider_not_null"),
-      count(when(col("id").isNull, 1)).as("id_not_null"),
-      count(when(!col("provider").isin("velib", "lime"), 1))
-        .as("provider_accepted_values"),
-      count(when(col("lat") < -90.0 || col("lat") > 90.0 ||
-        col("lon") < -180.0 || col("lon") > 180.0, 1)).as("geo_in_range"),
-      count(when(col("num_bikes") < 0 || col("num_docks") < 0, 1))
-        .as("counts_non_negative")).collect().head
-    val rowChecks = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
+    val perKey = enriched.groupBy(col("provider"), col("id"), col("time"))
+      .agg(count(lit(1)).as("rows"), rowChecks.map { case (n, c) =>
+        count(when(c, 1)).as(n)
+      }: _*)
+    val totals = rowChecks.map { case (n, _) =>
+      coalesce(sum(col(n)), lit(0L)).as(n)
+    } :+ count(when(col("rows") > 1, 1)).as("provider_id_time_unique")
+    val row = perKey.agg(totals.head, totals.tail: _*).collect().head
+    row.schema.fieldNames.toSeq.zipWithIndex.map { case (n, i) =>
       CheckResult(n, row.getLong(i))
-    }.toSeq
-    val dupes = enriched.groupBy(col("provider"), col("id"), col("time"))
-      .count().filter(col("count") > 1).count()
-    rowChecks :+ CheckResult("provider_id_time_unique", dupes)
+    }
   }
 
   def failures(enriched: DataFrame): Seq[CheckResult] =

@@ -9,7 +9,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.bike.BikeJobs
+import graft.bike.{BikeJobs, BikeSchemas}
 import graft.enriched.Enriched
 import graft.ml.WeightedKMeans
 import graft.serving.{ParquetSink, Serving, Sink}
@@ -36,10 +36,18 @@ object BikePipeline {
 
   final case class RetryPolicy(retries: Int = 2, delay: FiniteDuration = 5.minutes)
 
-  /** One DAG step's outcome: attempts made, the step's output, and
-    * `millis`, the wall time across all attempts (retry delays included). */
+  /** The local properties `SparkContext.setJobGroup` sets. */
+  private val JobGroupKeys = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
+
+  /** One DAG step's outcome: attempts made, the step's output, `millis`,
+    * the wall time across all attempts (retry delays included), and
+    * `rows`, the rows the step wrote. Zone writes count their parquet
+    * footers ([[ParquetSink.rowCount]], no Spark job); serving reports
+    * its sink's verified count (0 for a sink that cannot count), k_means
+    * its result rows, and the fetch steps, which write raw bytes, 0. */
   final case class StepReport(name: String, attempts: Int, output: String,
-                              millis: Long)
+                              millis: Long, rows: Long)
 
   final case class PipelineReport(steps: Seq[StepReport],
                                   servedCount: Option[Long],
@@ -48,8 +56,8 @@ object BikePipeline {
   /** A step's value plus how it ran. */
   private final case class Ran[T](name: String, value: T, attempts: Int,
                                   millis: Long) {
-    def report(output: String): StepReport =
-      StepReport(name, attempts, output, millis)
+    def report(output: String, rows: Long): StepReport =
+      StepReport(name, attempts, output, millis, rows)
   }
 
   /** Per-step retry wrapper (O1), timing all attempts.
@@ -86,17 +94,28 @@ object BikePipeline {
           kmeansParams: WeightedKMeans.Params = WeightedKMeans.Params(),
           servingSink: Option[Sink] = None): PipelineReport = {
     implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    // The branches run on pool threads, which keep the Spark local
+    // properties of whichever thread created them: hand them the caller's
+    // job group, so cancelling or listening to that group covers the
+    // whole drop.
+    val jobGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
 
     // O2 fan-out: ingest→transform per feed, in parallel.
     def branch(feed: Feed, transform: (SparkSession, String, String) => String,
                stepName: String): Future[Seq[StepReport]] = Future {
-      val drop = withRetry(s"fetch_$stepName", retry) {
-        Ingest.fetchStore(client, feed, lakeRoot, clock)
-      }
-      val formatted = withRetry(s"transform_$stepName", retry) {
-        transform(spark, drop.value, lakeRoot)
-      }
-      Seq(drop.report(drop.value), formatted.report(formatted.value))
+      jobGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try {
+        val drop = withRetry(s"fetch_$stepName", retry) {
+          Ingest.fetchStore(client, feed, lakeRoot, clock)
+        }
+        val formatted = withRetry(s"transform_$stepName", retry) {
+          val out = transform(spark, drop.value, lakeRoot)
+          (out, ParquetSink.rowCount(spark, out))
+        }
+        val (out, rows) = formatted.value
+        Seq(drop.report(drop.value, 0L), formatted.report(out, rows))
+      } finally JobGroupKeys.foreach(sc.setLocalProperty(_, null))
     }
 
     val branches = Future.sequence(Seq(
@@ -111,14 +130,20 @@ object BikePipeline {
       "si" -> branchReports.find(_.name == "transform_si").get.output,
       "lime" -> branchReports.find(_.name == "transform_lime").get.output)
 
-    // Enriched stage + quality gate (replaces dbt_run >> dbt_test).
-    val enrichedPath = withRetry("enriched_stage", retry) {
-      Enriched.runStage(
-        spark.read.parquet(formattedPath("ss")),
-        spark.read.parquet(formattedPath("si")),
-        spark.read.parquet(formattedPath("lime")),
+    // Enriched stage + quality gate (replaces dbt_run >> dbt_test). The
+    // transforms write exactly the declared formatted schemas
+    // (Transforms.enforceSchema), so the reads declare them too and skip
+    // the footer-inference job per feed.
+    val enriched = withRetry("enriched_stage", retry) {
+      val out = Enriched.runStage(
+        spark.read.schema(BikeSchemas.ssFormatted).parquet(formattedPath("ss")),
+        spark.read.schema(BikeSchemas.siFormatted).parquet(formattedPath("si")),
+        spark.read.schema(BikeSchemas.limeFormatted)
+          .parquet(formattedPath("lime")),
         lakeRoot)
+      (out, ParquetSink.rowCount(spark, out))
     }
+    val (enrichedPath, enrichedRows) = enriched.value
 
     // Serving (index_to_elastic analog; parquet sink by default offline).
     val sink = servingSink.getOrElse(ParquetSink(s"$lakeRoot/serving/all_bike_data"))
@@ -132,13 +157,12 @@ object BikePipeline {
     val kmeans = withRetry("k_means", retry) {
       val end = Timestamp.from(clock.instant())
       val start = Timestamp.from(clock.instant().minusSeconds(90 * 60))
-      val enriched = spark.read.schema(graft.bike.BikeSchemas.enriched)
-        .parquet(enrichedPath.value)
+      val input = spark.read.schema(BikeSchemas.enriched).parquet(enrichedPath)
       try {
-        val (result, _) = WeightedKMeans.run(enriched, start, end, kmeansParams)
+        val (result, _) = WeightedKMeans.run(input, start, end, kmeansParams)
         val out = s"$lakeRoot/usage/kmeans_results/"
         result.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-        (spark.read.parquet(out).count(), out)
+        (ParquetSink.rowCount(spark, out), out)
       } catch {
         case e: WeightedKMeans.EmptyWindowException =>
           System.err.println(s"[pipeline] k_means skipped: ${e.getMessage}")
@@ -149,9 +173,10 @@ object BikePipeline {
 
     PipelineReport(
       branchReports ++ Seq(
-        enrichedPath.report(enrichedPath.value),
-        served.report(served.value.map(_.toString).getOrElse("-")),
-        kmeans.report(usagePath)),
+        enriched.report(enrichedPath, enrichedRows),
+        served.report(served.value.map(_.toString).getOrElse("-"),
+          served.value.getOrElse(0L)),
+        kmeans.report(usagePath, kmeansRows)),
       served.value, kmeansRows)
   }
 }
@@ -178,7 +203,7 @@ object PipelineCli {
     val report = BikePipeline.run(spark, client, lakeRoot, clock)
     report.steps.foreach(s =>
       println(f"[pipeline] ${s.name}%-20s attempts=${s.attempts} " +
-        f"${s.millis}%6d ms → ${s.output}"))
+        f"${s.millis}%6d ms rows=${s.rows}%-7d → ${s.output}"))
     println(s"[pipeline] served=${report.servedCount} kmeansRows=${report.kmeansRows}")
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft.serving
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,16 +20,48 @@ trait Sink {
   def write(df: DataFrame): Unit
 
   /** S11 — post-write count verification (the reference's `match_all`
-    * REST count, `index_to_elastic_with_spark.py:40-68`). None when the
-    * sink cannot count (console). */
+    * REST count, `index_to_elastic_with_spark.py:40-68`): the count comes
+    * back from what the sink committed, not from the frame it was handed.
+    * None when the sink cannot count (console). */
   def verifiedCount(spark: SparkSession): Option[Long]
 }
 
 final case class ParquetSink(path: String) extends Sink {
   def write(df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** S11 as a footer count: see [[ParquetSink.rowCount]]. */
   def verifiedCount(spark: SparkSession): Option[Long] =
-    Some(spark.read.parquet(path).count())
+    Some(ParquetSink.rowCount(spark, path))
+}
+
+object ParquetSink {
+
+  /** Rows in the parquet data under `dir`, summed from each file's footer
+    * on the driver — no Spark job. This is the same verification as
+    * `spark.read.parquet(dir).count()`: that count also answers from the
+    * row groups' row counts (no column is required, so the reader decodes
+    * no page), and it also reads the committed files back from storage.
+    * The listing follows Spark's file index: names starting with `_`
+    * (unless they hold a `=`, a partition directory) or `.` are skipped
+    * — `_SUCCESS`, `.crc` checksums, `_temporary` — and subdirectories
+    * are walked. A missing `dir` raises, as the read would. */
+  def rowCount(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def dataFiles(p: Path): Iterator[FileStatus] =
+      fs.listStatus(p).iterator.filterNot(s => hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Iterator(s))
+    dataFiles(root).map { status =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 }
 
 final case class ConsoleSink(numRows: Int = 20) extends Sink {

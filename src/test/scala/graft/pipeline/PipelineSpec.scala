@@ -2,8 +2,11 @@ package graft.pipeline
 
 import java.time.{Clock, Instant, ZoneOffset}
 
+import scala.collection.mutable
 import scala.concurrent.duration._
 
+import org.apache.spark.graftbridge.SparkTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -79,6 +82,52 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
     new java.io.File(s"$lakeRoot/enriched/default_velib_lime/enriched_join_velib_lime/default")
       .exists() shouldBe true
     new java.io.File(s"$lakeRoot/usage/kmeans_results").exists() shouldBe true
+  }
+
+  test("step reports carry the rows each step wrote") {
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-rows").toString
+    val report = BikePipeline.run(spark, fixtureClient, lakeRoot, clock,
+      BikePipeline.RetryPolicy(retries = 0, delay = 0.millis),
+      WeightedKMeans.Params(k = 3, seed = 1L))
+    report.steps.map(s => s.name -> s.rows).toMap shouldBe Map(
+      "fetch_ss" -> 0L, "fetch_si" -> 0L, "fetch_lime" -> 0L,
+      // 8 status stations, 8 information stations, 5 free bikes
+      "transform_ss" -> 8L, "transform_si" -> 8L, "transform_lime" -> 5L,
+      "enriched_stage" -> 12L, "index_to_serving" -> 12L, "k_means" -> 9L)
+    // each transform's count is its formatted zone's row count
+    Seq("transform_ss", "transform_si", "transform_lime").foreach { n =>
+      val step = report.steps.find(_.name == n).get
+      spark.read.parquet(step.output).count() shouldBe step.rows
+    }
+  }
+
+  test("one pipeline run on the fixture feeds launches at most 12 Spark " +
+    "jobs") {
+    val sc = spark.sparkContext
+    val group = "bike-pipeline-run"
+    val jobs = mutable.ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.synchronized(jobs += e.jobId)
+    }
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "BikePipeline.run")
+      val report =
+        try BikePipeline.run(spark, fixtureClient, lakeRoot, clock,
+          BikePipeline.RetryPolicy(retries = 0, delay = 0.millis),
+          WeightedKMeans.Params(k = 3, seed = 1L))
+        finally sc.clearJobGroup()
+      SparkTestBridge.drainListeners(sc)
+      report.servedCount shouldBe Some(12L)
+      report.kmeansRows shouldBe 9L
+      val n = jobs.synchronized(jobs.size)
+      info(s"$n Spark jobs")
+      n should be <= 12
+    } finally sc.removeSparkListener(listener)
   }
 
   test("step reports carry each step's wall time across its attempts") {

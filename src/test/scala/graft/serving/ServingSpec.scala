@@ -90,4 +90,83 @@ class ServingSpec extends AnyFunSuite with Matchers with SparkSpec {
       sink.write(Serving.prepare(enrichedFixture))
     sink.verifiedCount(spark) shouldBe None
   }
+
+  /** `rowCount` against the count Spark's own read gives, on `dir`. */
+  private def footerCountMatches(dir: String, expected: Long): Unit = {
+    val counted = ParquetSink.rowCount(spark, dir)
+    counted shouldBe spark.read.parquet(dir).count()
+    counted shouldBe expected
+  }
+
+  test("rowCount: a multi-file write, counted from footers without a " +
+    "Spark job") {
+    import scala.collection.mutable
+    import org.apache.spark.graftbridge.SparkTestBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/t"
+    spark.range(0, 1000, 1, 4).write.parquet(dir)
+    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) shouldBe 4
+    val sc = spark.sparkContext
+    val group = "parquet-row-count"
+    val jobs = mutable.ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.synchronized(jobs += e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ParquetSink.rowCount")
+      try ParquetSink.rowCount(spark, dir) shouldBe 1000L
+      finally sc.clearJobGroup()
+      SparkTestBridge.drainListeners(sc)
+      jobs.synchronized(jobs.size) shouldBe 0
+    } finally sc.removeSparkListener(listener)
+    footerCountMatches(dir, 1000L)
+  }
+
+  test("rowCount: partition subdirectories are walked") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/p"
+    spark.range(0, 100).withColumn("part", col("id") % 3)
+      .write.partitionBy("part").parquet(dir)
+    footerCountMatches(dir, 100L)
+  }
+
+  test("rowCount: an empty-DataFrame write counts 0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/e"
+    spark.range(0, 10).filter(col("id") < 0).write.parquet(dir)
+    footerCountMatches(dir, 0L)
+  }
+
+  test("rowCount: an overwrite that shrinks the output counts only the " +
+    "new files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/o"
+    spark.range(0, 1000, 1, 8).write.parquet(dir)
+    spark.range(0, 10, 1, 1).write.mode("overwrite").parquet(dir)
+    footerCountMatches(dir, 10L)
+  }
+
+  test("rowCount: _SUCCESS, .crc and other _/. files are not data") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/c"
+    spark.range(0, 50, 1, 2).write.parquet(dir)
+    val names = new java.io.File(dir).list().toSeq
+    names should contain("_SUCCESS")
+    names.count(n => n.startsWith(".") && n.endsWith(".crc")) should be > 0
+    // the local file system hides .crc files from listings itself; these
+    // stray non-parquet files reach the name filter
+    Seq("_stray", ".stray").foreach { n =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, n),
+        "not parquet".getBytes("UTF-8"))
+    }
+    footerCountMatches(dir, 50L)
+  }
+
+  test("rowCount: a missing directory raises, not 0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rc").toString
+    a[java.io.FileNotFoundException] should be thrownBy
+      ParquetSink.rowCount(spark, s"$dir/missing")
+    a[java.io.FileNotFoundException] should be thrownBy
+      ParquetSink(s"$dir/missing").verifiedCount(spark)
+  }
 }

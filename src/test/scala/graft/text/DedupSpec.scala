@@ -263,17 +263,31 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("sizedPartitions clamps to [1, session shuffle partitions]: tiny " +
     "frames collapse, huge estimates cap at the session width") {
     import spark.implicits._
-    val sessionMax =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the session width is the documented cap, max(shuffle partitions,
+    // default parallelism); the next test pins the max
+    def cap = math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sparkContext.defaultParallelism)
     val tiny = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
     Dedup.sizedPartitions(tiny) shouldBe 1
     // force a huge estimate with a tiny target so the cap engages
     val capped = Dedup.sizedPartitions(
       Tables.documents(spark, sf), targetBytes = 1L)
-    capped shouldBe sessionMax
-    // never below 1, never above the session width, for any frame
+    capped shouldBe cap
+    // never below 1, never above the cap, for any frame
     val mid = Dedup.sizedPartitions(Tables.documents(spark, sf))
     mid should be >= 1
-    mid should be <= sessionMax
+    mid should be <= cap
+  }
+
+  test("sizedPartitions: a session shuffle width below the default " +
+    "parallelism caps at the default parallelism") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    assume(parallelism > 1, "needs a default parallelism above 1")
+    val key = "spark.sql.shuffle.partitions"
+    val previous = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try Dedup.sizedPartitions(Tables.documents(spark, sf),
+      targetBytes = 1L) shouldBe parallelism
+    finally spark.conf.set(key, previous)
   }
 }
