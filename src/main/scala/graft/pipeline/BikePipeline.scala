@@ -4,9 +4,11 @@ import java.sql.Timestamp
 import java.time.Clock
 
 import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.util.{Failure, Success, Try}
+import scala.util.control.Exception.allCatch
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 import graft.bike.{BikeJobs, BikeSchemas}
@@ -22,15 +24,24 @@ import graft.serving.{ParquetSink, Serving, Sink}
   *        → each its transform                      (still parallel)
   *        → barrier
   *        → enriched stage + quality gate           (replaces dbt run+test)
-  *        → serving                                 (index_to_elastic)
-  *        → weighted k-means
+  *        → { serving (index_to_elastic),
+  *            weighted k-means read + fit }         (side by side)
+  *        → k-means result write (usage zone)
   * }}}
+  *
+  * K-Means reads only the enriched zone, so its read and fit
+  * ([[WeightedKMeans.run]]) run beside serving; its result is written
+  * only once serving has returned, so the usage zone still lands after
+  * serving, as the reference's `index_to_elastic >> k_means` orders it,
+  * and a failed serving step leaves the usage zone untouched.
   *
   * Retry policy: 2 retries, 5-minute delay — the DAG's default_args
   * (`dag_bike.py:32-33`); delay injectable so tests run instantly. Step
   * results pass by return value (the Airflow XCom contract, O3). Cron
   * scheduling stays external, as in the reference (every 3 hours,
-  * `dag_bike.py:36`).
+  * `dag_bike.py:36`). `run` returns or throws only once every step it
+  * started has settled: a failed step never leaves a sibling running
+  * Spark jobs on the caller's session.
   */
 object BikePipeline {
 
@@ -41,7 +52,8 @@ object BikePipeline {
     "spark.job.interruptOnCancel")
 
   /** One DAG step's outcome: attempts made, the step's output, `millis`,
-    * the wall time across all attempts (retry delays included), and
+    * the wall time across all attempts (retry delays included; for
+    * k_means also its wait for serving before the result write), and
     * `rows`, the rows the step wrote. Zone writes count their parquet
     * footers ([[ParquetSink.rowCount]], no Spark job); serving reports
     * its sink's verified count (0 for a sink that cannot count), k_means
@@ -60,9 +72,16 @@ object BikePipeline {
       StepReport(name, attempts, output, millis, rows)
   }
 
+  /** The k_means step was waiting to write its result when serving
+    * failed. */
+  private final class ServingFailedException(cause: Throwable)
+    extends RuntimeException("index_to_serving failed; the K-Means result " +
+      "is not written", cause)
+
   /** Per-step retry wrapper (O1), timing all attempts.
-    * [[WeightedKMeans.WindowTooLargeException]] is deterministic —
-    * retrying cannot help — so it propagates immediately. */
+    * [[WeightedKMeans.WindowTooLargeException]] is deterministic, and a
+    * [[ServingFailedException]] is another step's failure — retrying
+    * cannot help either — so both propagate immediately. */
   private def withRetry[T](name: String, policy: RetryPolicy)
                           (body: => T): Ran[T] = {
     val t0 = System.nanoTime()
@@ -74,6 +93,7 @@ object BikePipeline {
         case Success(v) =>
           return Ran(name, v, attempt, (System.nanoTime() - t0) / 1000000L)
         case Failure(e: WeightedKMeans.WindowTooLargeException) => throw e
+        case Failure(e: ServingFailedException) => throw e
         case Failure(e) =>
           last = Some(e)
           System.err.println(s"[pipeline] step $name attempt $attempt failed: " +
@@ -85,6 +105,29 @@ object BikePipeline {
       s"attempts", last.orNull)
   }
 
+  /** Runs `body` on a pool thread under the calling thread's job group.
+    * Pool threads keep the Spark local properties of whichever thread
+    * created them, so the group is handed over explicitly (and cleared
+    * after): cancelling or listening to the caller's group then covers
+    * the whole drop. The future holds `body`'s outcome, a fatal error
+    * too: a plain `Future` never completes on one, and `run` would wait
+    * on it forever. */
+  private def inCallerJobGroup[T](sc: SparkContext)(body: => T)
+                                 (implicit ec: ExecutionContext): Future[Try[T]] = {
+    val jobGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
+    Future {
+      jobGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try allCatch.withTry(body)
+      finally JobGroupKeys.foreach(sc.setLocalProperty(_, null))
+    }
+  }
+
+  /** Waits for a step started by [[inCallerJobGroup]] to settle, however
+    * long its retries take: `run` must not return while a step it
+    * started can still launch Spark jobs. */
+  private def settle[T](step: Future[Try[T]]): Try[T] =
+    Await.result(step, Duration.Inf)
+
   /** Full DAG run on a lake rooted at `lakeRoot`. `clock` drives both the
     * raw-drop partition stamps and the K-Means trailing-90-minute window
     * (`k_means_with_spark.py:26-39`). */
@@ -95,17 +138,11 @@ object BikePipeline {
           servingSink: Option[Sink] = None): PipelineReport = {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val sc = spark.sparkContext
-    // The branches run on pool threads, which keep the Spark local
-    // properties of whichever thread created them: hand them the caller's
-    // job group, so cancelling or listening to that group covers the
-    // whole drop.
-    val jobGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
 
     // O2 fan-out: ingest→transform per feed, in parallel.
     def branch(feed: Feed, transform: (SparkSession, String, String) => String,
-               stepName: String): Future[Seq[StepReport]] = Future {
-      jobGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      try {
+               stepName: String): Future[Try[Seq[StepReport]]] =
+      inCallerJobGroup(sc) {
         val drop = withRetry(s"fetch_$stepName", retry) {
           Ingest.fetchStore(client, feed, lakeRoot, clock)
         }
@@ -115,15 +152,15 @@ object BikePipeline {
         }
         val (out, rows) = formatted.value
         Seq(drop.report(drop.value, 0L), formatted.report(out, rows))
-      } finally JobGroupKeys.foreach(sc.setLocalProperty(_, null))
-    }
+      }
 
-    val branches = Future.sequence(Seq(
+    val branches = Seq(
       branch(Feed.VelibSs, BikeJobs.runSs, "ss"),
       branch(Feed.VelibSi, BikeJobs.runSi, "si"),
-      branch(Feed.LimeFbs, BikeJobs.runLime, "lime")))
+      branch(Feed.LimeFbs, BikeJobs.runLime, "lime"))
     // O2 barrier: all transforms must land before the enriched stage.
-    val branchReports = Await.result(branches, 30.minutes).flatten
+    // Every branch settles before the first failure is rethrown.
+    val branchReports = branches.map(settle).flatMap(_.get)
 
     val formattedPath = Map(
       "ss" -> branchReports.find(_.name == "transform_ss").get.output,
@@ -145,30 +182,43 @@ object BikePipeline {
     }
     val (enrichedPath, enrichedRows) = enriched.value
 
-    // Serving (index_to_elastic analog; parquet sink by default offline).
-    val sink = servingSink.getOrElse(ParquetSink(s"$lakeRoot/serving/all_bike_data"))
-    val served = withRetry("index_to_serving", retry) {
-      Serving.indexJob(spark, lakeRoot, sink)
-    }
-
-    // Weighted K-Means over the trailing 90 minutes (P4 window). An empty
-    // window is a normal condition (a quiet feed, a re-run long after the
-    // drop) — skip the step instead of burning retries on it.
-    val kmeans = withRetry("k_means", retry) {
-      val end = Timestamp.from(clock.instant())
-      val start = Timestamp.from(clock.instant().minusSeconds(90 * 60))
-      val input = spark.read.schema(BikeSchemas.enriched).parquet(enrichedPath)
-      try {
-        val (result, _) = WeightedKMeans.run(input, start, end, kmeansParams)
-        val out = s"$lakeRoot/usage/kmeans_results/"
-        result.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-        (ParquetSink.rowCount(spark, out), out)
-      } catch {
-        case e: WeightedKMeans.EmptyWindowException =>
-          System.err.println(s"[pipeline] k_means skipped: ${e.getMessage}")
-          (0L, "skipped: empty window")
+    // Weighted K-Means over the trailing 90 minutes (P4 window), read and
+    // fit beside serving; the result is written once serving has
+    // returned. An empty window is a normal condition (a quiet feed, a
+    // re-run long after the drop) — skip the step instead of burning
+    // retries on it.
+    val servingDone = Promise[Unit]()
+    val kmeansRun = inCallerJobGroup(sc) {
+      withRetry("k_means", retry) {
+        val end = Timestamp.from(clock.instant())
+        val start = Timestamp.from(clock.instant().minusSeconds(90 * 60))
+        val input = spark.read.schema(BikeSchemas.enriched).parquet(enrichedPath)
+        try {
+          val (result, _) = WeightedKMeans.run(input, start, end, kmeansParams)
+          Await.result(servingDone.future, Duration.Inf)
+          val out = s"$lakeRoot/usage/kmeans_results/"
+          result.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+          (ParquetSink.rowCount(spark, out), out)
+        } catch {
+          case e: WeightedKMeans.EmptyWindowException =>
+            System.err.println(s"[pipeline] k_means skipped: ${e.getMessage}")
+            (0L, "skipped: empty window")
+        }
       }
     }
+
+    // Serving (index_to_elastic analog; parquet sink by default offline).
+    val sink = servingSink.getOrElse(ParquetSink(s"$lakeRoot/serving/all_bike_data"))
+    // every outcome, a fatal one too, must release the waiting k_means step
+    val servedTry = allCatch.withTry(withRetry("index_to_serving", retry) {
+      Serving.indexJob(spark, lakeRoot, sink)
+    })
+    servingDone.complete(servedTry.map(_ => ())
+      .recoverWith { case e => Failure(new ServingFailedException(e)) })
+    val kmeansTry = settle(kmeansRun)
+    // serving's own failure comes first: k_means only waited on it
+    val served = servedTry.get
+    val kmeans = kmeansTry.get
     val (kmeansRows, usagePath) = kmeans.value
 
     PipelineReport(

@@ -1,18 +1,25 @@
 package graft.pipeline
 
+import java.io.File
 import java.time.{Clock, Instant, ZoneOffset}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 import scala.concurrent.duration._
 
 import org.apache.spark.graftbridge.SparkTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 import graft.bike.{BikeJobs, BikeQueries}
 import graft.ml.WeightedKMeans
+import graft.serving.{ParquetSink, Sink}
 
 class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -22,6 +29,44 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
     Clock.fixed(Instant.ofEpochSecond(1740000300L), ZoneOffset.UTC)
 
   private def fixtureClient = new FixtureFeedClient(BikeQueries.fixtureDir)
+
+  /** Sees the K-Means training collect succeed: the only collect of a
+    * pipeline run whose rows carry the `weight` column. */
+  private final class TrainingCollects extends QueryExecutionListener {
+    val count = new AtomicInteger
+    val seen = new CountDownLatch(1)
+    override def onSuccess(funcName: String, qe: QueryExecution,
+                           durationNs: Long): Unit =
+      if (funcName == "collect" && qe.analyzed.output.exists(_.name == "weight")) {
+        count.incrementAndGet()
+        seen.countDown()
+      }
+    override def onFailure(funcName: String, qe: QueryExecution,
+                           exception: Exception): Unit = ()
+  }
+
+  private def withTrainingCollects[T](body: TrainingCollects => T): T = {
+    val collects = new TrainingCollects
+    spark.listenerManager.register(collects)
+    try body(collects)
+    finally spark.listenerManager.unregister(collects)
+  }
+
+  /** Spark job start times (ms) of job group `group` while `body` runs. */
+  private def withGroupJobStarts[T](group: String)
+                                   (body: mutable.ArrayBuffer[Long] => T): T = {
+    val sc = spark.sparkContext
+    val starts = mutable.ArrayBuffer.empty[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          starts.synchronized(starts += e.time)
+    }
+    sc.addSparkListener(listener)
+    try body(starts)
+    finally sc.removeSparkListener(listener)
+  }
 
   test("ingest drops bytes verbatim under the date/time raw layout") {
     val lakeRoot = java.nio.file.Files.createTempDirectory("graft-ing").toString
@@ -101,20 +146,12 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
-  test("one pipeline run on the fixture feeds launches at most 12 Spark " +
+  test("one pipeline run on the fixture feeds launches exactly 12 Spark " +
     "jobs") {
     val sc = spark.sparkContext
     val group = "bike-pipeline-run"
-    val jobs = mutable.ArrayBuffer.empty[Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.synchronized(jobs += e.jobId)
-    }
     val lakeRoot = java.nio.file.Files.createTempDirectory("graft-jobs").toString
-    sc.addSparkListener(listener)
-    try {
+    withGroupJobStarts(group) { jobs =>
       sc.setJobGroup(group, "BikePipeline.run")
       val report =
         try BikePipeline.run(spark, fixtureClient, lakeRoot, clock,
@@ -126,8 +163,90 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
       report.kmeansRows shouldBe 9L
       val n = jobs.synchronized(jobs.size)
       info(s"$n Spark jobs")
-      n should be <= 12
-    } finally sc.removeSparkListener(listener)
+      // exact, not at most: a pool thread that dropped the caller's group
+      // would leave its jobs uncounted
+      n shouldBe 12
+    }
+  }
+
+  test("a failed branch lets its siblings settle before run throws: their " +
+    "formatted zones land and no job of the caller's group starts after") {
+    val sc = spark.sparkContext
+    val group = "bike-pipeline-failed-branch"
+    val slowSsDeadLime = new FeedClient {
+      def fetch(feed: Feed): Array[Byte] = feed match {
+        case Feed.VelibSs => Thread.sleep(500); fixtureClient.fetch(feed)
+        case Feed.LimeFbs => throw new RuntimeException("lime down")
+        case _ => fixtureClient.fetch(feed)
+      }
+    }
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    withGroupJobStarts(group) { jobs =>
+      sc.setJobGroup(group, "BikePipeline.run")
+      val ex =
+        try the[RuntimeException] thrownBy BikePipeline.run(spark,
+          slowSsDeadLime, lakeRoot, clock,
+          BikePipeline.RetryPolicy(retries = 0, delay = 0.millis))
+        finally sc.clearJobGroup()
+      val thrownAt = System.currentTimeMillis()
+      ex.getMessage shouldBe "step fetch_lime exhausted 1 attempts"
+      Seq(BikeJobs.FormattedVelibSs, BikeJobs.FormattedVelibSi).foreach { zone =>
+        new File(s"$lakeRoot/$zone/20250219/212500/_SUCCESS").exists() shouldBe true
+      }
+      // a branch still running would launch its transform's jobs by now
+      Thread.sleep(1000)
+      SparkTestBridge.drainListeners(sc)
+      val late = jobs.synchronized(jobs.filter(_ > thrownAt).toList)
+      late shouldBe empty
+    }
+  }
+
+  test("a failed serving step fails the run with its own error, leaves the " +
+    "usage zone unwritten and is not retried by k_means") {
+    val deadSink = new Sink {
+      def write(df: DataFrame): Unit = throw new RuntimeException("index down")
+      def verifiedCount(spark: SparkSession): Option[Long] = None
+    }
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-srv").toString
+    withTrainingCollects { collects =>
+      val ex = the[RuntimeException] thrownBy BikePipeline.run(spark,
+        fixtureClient, lakeRoot, clock,
+        BikePipeline.RetryPolicy(retries = 1, delay = 200.millis),
+        WeightedKMeans.Params(k = 3, seed = 1L), Some(deadSink))
+      ex.getMessage shouldBe "step index_to_serving exhausted 2 attempts"
+      ex.getCause.getMessage shouldBe "index down"
+      new File(s"$lakeRoot/usage/kmeans_results").exists() shouldBe false
+      // k_means fitted once and gave up on serving's failure: a retry
+      // would wait out the delay and fit again
+      SparkTestBridge.drainListeners(spark.sparkContext)
+      collects.count.get shouldBe 1
+    }
+  }
+
+  test("serving and the K-Means fit overlap, and the usage zone lands " +
+    "only after serving") {
+    val lakeRoot = java.nio.file.Files.createTempDirectory("graft-ovl").toString
+    val usage = new File(s"$lakeRoot/usage/kmeans_results")
+    withTrainingCollects { collects =>
+      val parquet = ParquetSink(s"$lakeRoot/serving/all_bike_data")
+      val overlapping = new Sink {
+        def write(df: DataFrame): Unit = {
+          usage.exists() shouldBe false
+          // serving is under way: the fit must finish without waiting on it
+          collects.seen.await(60, TimeUnit.SECONDS) shouldBe true
+          parquet.write(df)
+          usage.exists() shouldBe false
+        }
+        def verifiedCount(spark: SparkSession): Option[Long] =
+          parquet.verifiedCount(spark)
+      }
+      val report = BikePipeline.run(spark, fixtureClient, lakeRoot, clock,
+        BikePipeline.RetryPolicy(retries = 0, delay = 0.millis),
+        WeightedKMeans.Params(k = 3, seed = 1L), Some(overlapping))
+      report.servedCount shouldBe Some(12L)
+      report.kmeansRows shouldBe 9L
+      usage.exists() shouldBe true
+    }
   }
 
   test("step reports carry each step's wall time across its attempts") {
