@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * cached executor-globally with an LRU byte cap, so one file's vector
   * loads once per executor, not once per task.
   *
-  * Read-side application is the [[DvLive]] catalyst predicate (full
+  * Read-side application is the [[RowLive]] catalyst predicate (full
   * codegen via [[BinaryExpression.nullSafeCodeGen]]): a per-task
   * last-file memo makes the per-row cost one virtual call + one bitmap
   * probe, and the surrounding scan stays inside one whole-stage-codegen
@@ -169,74 +169,141 @@ object DeletionVectors {
 
   // ---- executor-global bounded cache -----------------------------------
 
-  /** LRU cache of decoded vectors, keyed by (table, token) — the token
-    * embeds version+attempt+offset, so a file's cumulative vector from a
-    * NEW commit is a new key and stale entries simply age out. Byte cap
-    * via -Dgraft.dv.cache.bytes (default 256 MiB per executor JVM).
-    * Synchronized access happens only on FILE switches (the [[DvLive]]
-    * per-task memo absorbs per-row traffic), so contention is O(files),
-    * not O(rows). */
-  private object DvStore {
-    private val capBytes: Long =
-      sys.props.get("graft.dv.cache.bytes").map(_.toLong)
-        .getOrElse(256L * 1024 * 1024)
-    private var totalBytes = 0L
+  /** LRU of decoded kill sets under ONE byte cap, whatever their on-disk
+    * dialect: a lake `dv=` block, a Delta descriptor, a Puffin blob, or
+    * a whole Iceberg position-delete file decoded to a (data file →
+    * bits) map. Keys embed the token (version, attempt and offset, or
+    * the delete file's path), so a file's vector from a NEW commit is a
+    * new key and stale entries simply age out. The entry just loaded
+    * is never evicted, so one kill set larger than the cap still
+    * serves. Synchronized access happens only on FILE switches (the
+    * [[RowLive]] per-task memo absorbs per-row traffic), so contention
+    * is O(files), not O(rows). */
+  private[sources] final class KillSetCache(capBytes: Long) {
+    private var total = 0L
     private val cache =
-      new java.util.LinkedHashMap[String, DvBits](64, 0.75f, true)
+      new java.util.LinkedHashMap[String, (AnyRef, Long)](64, 0.75f, true)
 
-    def get(table: String, token: String,
-            hconf: Map[String, String]): DvBits =
-      getWith(table + "\u0000" + token)(
-        load(table, parseRef(token), hconf))
+    /** Bytes the cached kill sets hold now. */
+    def bytes: Long = cache.synchronized(total)
 
-    /** Generic entry: cache `key` under the same LRU byte cap, loading
-      * with `loader` on a miss — the door foreign-format kill sets
-      * ([[ForeignDvLive]]) share so one executor holds ONE bounded
-      * pool of decoded vectors whatever their on-disk dialect. */
-    def getWith(key: String)(loader: => DvBits): DvBits = {
+    private def cached[V <: AnyRef](key: String, size: V => Long)(
+        loader: => V): V = {
       cache.synchronized {
         val hit = cache.get(key)
-        if (hit != null) return hit
+        if (hit != null) return hit._1.asInstanceOf[V]
       }
-      val bits = loader
+      val v = loader
+      val vBytes = size(v)
       cache.synchronized {
-        val prev = cache.putIfAbsent(key, bits)
-        if (prev != null) prev
+        val prev = cache.putIfAbsent(key, (v, vBytes))
+        if (prev != null) prev._1.asInstanceOf[V]
         else {
-          totalBytes += bits.sizeBytes
+          total += vBytes
           val it = cache.entrySet().iterator()
-          while (totalBytes > capBytes && cache.size() > 1 && it.hasNext) {
+          while (total > capBytes && cache.size() > 1 && it.hasNext) {
             val e = it.next()
             if (e.getKey != key) {
-              totalBytes -= e.getValue.sizeBytes
+              total -= e.getValue._2
               it.remove()
             }
           }
-          bits
+          v
         }
       }
     }
+
+    /** THE token grammar, for the data file keyed `key`: `value` holds
+      * one or more tokens joined by [[ForeignDv.Multi]] — a lake
+      * `rel#offset#length` block, or a [[ForeignDv.Sep]]-framed Delta
+      * descriptor (`D`), Puffin blob (`P`) or Iceberg position-delete
+      * file set (`I`, whose files are probed for `key`). */
+    def killSets(table: String, key: String, value: String,
+                 hconf: Map[String, String]): Array[DvBits] =
+      value.split(ForeignDv.Multi).flatMap { tok =>
+        if (tok.startsWith("I" + ForeignDv.Sep))
+          tok.split(ForeignDv.Sep).drop(1).flatMap(del =>
+            cached(del, (m: Map[String, DvBits]) =>
+              m.valuesIterator.map(_.sizeBytes).sum + 64L * m.size)(
+              ForeignDv.loadDeleteFile(del, hconf)).get(key))
+        else Array(cached(table + "\u0000" + tok, (b: DvBits) => b.sizeBytes)(
+          if (tok.startsWith("D" + ForeignDv.Sep))
+            ForeignDv.loadDelta(table, tok, hconf)
+          else if (tok.startsWith("P" + ForeignDv.Sep))
+            ForeignDv.loadPuffin(tok, hconf)
+          else load(table, parseRef(tok), hconf)))
+      }
   }
 
-  /** Cached decoded vector for a token (see [[DvStore]]). */
-  private[sources] def get(table: String, token: String,
-                           hconf: Map[String, String]): DvBits =
-    DvStore.get(table, token, hconf)
+  /** The executor JVM's cache: -Dgraft.dv.cache.bytes caps it (default
+    * 256 MiB). */
+  private[sources] val cache = new KillSetCache(
+    sys.props.get("graft.dv.cache.bytes").map(_.toLong)
+      .getOrElse(256L * 1024 * 1024))
 
-  /** Generic cached decode under the shared executor LRU. */
-  private[sources] def getWith(key: String)(loader: => DvBits): DvBits =
-    DvStore.getWith(key)(loader)
+  /** The session's Hadoop conf as a serializable map — what the loaders
+    * rebuild a `Configuration` from inside executor tasks (the same
+    * propagation Spark itself uses for file access; local runs only
+    * need the defaults, a real cluster carries its fs.* keys). */
+  private[sources] def hadoopConfMap(spark: org.apache.spark.sql.SparkSession)
+      : Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration.iterator().asScala
+      .map(e => e.getKey -> e.getValue).toMap
+  }
 
-  /** Decoded bits for an arbitrary sorted kill list — the foreign-
-    * format loaders' constructor. */
-  private[sources] def bitsOf(sorted: Array[Long]): DvBits =
-    bitsFor(sorted)
-
-  private def fsConf(hconf: Map[String, String]): Configuration = {
+  private[sources] def fsConf(hconf: Map[String, String]): Configuration = {
     val c = new Configuration()
     hconf.foreach { case (k, v) => c.set(k, v) }
     c
   }
+
+  /** THE row-liveness filter of all three formats: a [[RowLive]] over
+    * (`fileCol`, `ridxCol`) carrying `refs` — each vectored data file's
+    * key (however the caller's scan names files) → its kill-set token.
+    * Evaluation loads the SCANNED file's kill set inside the scanning
+    * task and probes per row: no join, no Exchange, nothing
+    * materialized on the driver.
+    *
+    * ONE broadcast per (table, kill-set state), not per read: a
+    * long-lived session re-reading an unchanged table reuses the cached
+    * broadcast instead of accumulating blocks until GC and the
+    * ContextCleaner catch up. Reuse needs the SAME refs (a file read
+    * without a kill set must not meet a stale one — time travel and
+    * restore bring such files back), the same SparkContext (a broadcast
+    * outlives neither its context nor a session recycle) and the same
+    * Hadoop conf (rotated fs credentials must reach the loader). A
+    * superseded broadcast is unpersisted (non-blocking — executors
+    * re-fetch from the driver if an in-flight task still holds it). */
+  private[sources] def livePredicate(spark: org.apache.spark.sql.SparkSession,
+      table: String, refs: Map[String, String],
+      fileCol: org.apache.spark.sql.Column,
+      ridxCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val conf = hadoopConfMap(spark)
+    val sc = spark.sparkContext
+    val env = envCache.compute(table, (_, c) =>
+      if (c != null && (c.sc eq sc) && !sc.isStopped && c.refs == refs &&
+        c.conf == conf) c
+      else {
+        if (c != null && (c.sc eq sc)) scala.util.Try(c.bc.unpersist(false))
+        LiveEnv(sc, refs, conf, sc.broadcast((refs, conf)))
+      }).bc
+    ColumnBridge.column(RowLive(ColumnBridge.expression(fileCol),
+      ColumnBridge.expression(ridxCol), table, env))
+  }
+
+  /** One [[envCache]] entry: the owning context, the refs and Hadoop
+    * conf the broadcast carries, and the broadcast itself. */
+  private final case class LiveEnv(sc: org.apache.spark.SparkContext,
+      refs: Map[String, String], conf: Map[String, String],
+      bc: org.apache.spark.broadcast.Broadcast[(Map[String, String],
+        Map[String, String])])
+
+  /** Per-table cache behind [[livePredicate]]. Bounded by the number of
+    * distinct vectored tables a JVM touches. */
+  private val envCache =
+    new java.util.concurrent.ConcurrentHashMap[String, LiveEnv]()
 
   /** Seek-and-read exactly one block's byte range from its sidecar. */
   private def load(table: String, ref: DvRef,
@@ -321,25 +388,25 @@ object DeletionVectors {
   }
 }
 
-/** Is row (`file`, `ridx`) LIVE under this read's deletion vectors? The
-  * per-file replacement for the global broadcast anti-join: evaluated
-  * inside the scan's codegen stage, it memoizes the current file's
-  * decoded vector (rows arrive file-by-file within a task) and probes a
-  * bitmap per row. Files without a vector short-circuit to true via the
-  * refs map. Deterministic: `refs` tokens address immutable sidecar
-  * blocks pinned at plan time. */
-case class DvLive(left: Expression, right: Expression, table: String,
-                  env: org.apache.spark.broadcast.Broadcast[
-                    (Map[String, String], Map[String, String])])
+/** Is row (`file`, `ridx`) LIVE under this read's kill sets? The
+  * per-file replacement for a global anti-join, shared by the lake,
+  * Delta and Iceberg ([[DeletionVectors.livePredicate]] builds it):
+  * evaluated inside the scan's codegen stage, it memoizes the current
+  * file's decoded kill sets (rows arrive file-by-file within a task)
+  * and probes a bitmap per row. Files without a token short-circuit to
+  * live. Deterministic: tokens address immutable blocks and delete
+  * files pinned at plan time. */
+case class RowLive(left: Expression, right: Expression, table: String,
+                   env: org.apache.spark.broadcast.Broadcast[
+                     (Map[String, String], Map[String, String])])
     extends BinaryExpression {
 
-  /** The `dv=` token per vectored basename and the Hadoop conf ride a
-    * BROADCAST, not the expression: as case-class fields they would
-    * serialize into EVERY task binary of every stage scanning the
-    * table and weigh plan comparison — at a mass-delete's 100k
-    * vectored files that's O(files) bytes per task. The broadcast
-    * ships once per executor (Spark's own SerializableConfiguration
-    * pattern) and the expression carries an O(1) handle. */
+  /** The token per vectored file and the Hadoop conf ride a BROADCAST,
+    * not the expression: as case-class fields they would serialize into
+    * EVERY task binary of every stage scanning the table — at a mass
+    * delete's 100k vectored files that's O(files) bytes per task. The
+    * broadcast ships once per executor and the expression carries an
+    * O(1) handle. */
   private def refs: Map[String, String] = env.value._1
   private def hconf: Map[String, String] = env.value._2
 
@@ -347,9 +414,9 @@ case class DvLive(left: Expression, right: Expression, table: String,
 
   override def prettyName: String = "dv_live"
 
-  /** Plan rendering: the vector tokens and the rebuilt Hadoop conf are
-    * payload, not structure — without this override every explain()
-    * prints opaque broadcast internals per DV filter. */
+  /** Plan rendering: the tokens and the Hadoop conf are payload, not
+    * structure — without this override every explain() prints opaque
+    * broadcast internals. */
   override def stringArgs: Iterator[Any] =
     Iterator(left, right, table, s"${refs.size} vectored file(s)")
 
@@ -362,23 +429,22 @@ case class DvLive(left: Expression, right: Expression, table: String,
     }
 
   @transient private var lastFile: UTF8String = _
-  @transient private var lastBits: DeletionVectors.DvBits = _
-  @transient private var lastHas: Boolean = false
+  @transient private var lastBits: Array[DeletionVectors.DvBits] = _
 
   def live(file: UTF8String, ridx: Long): Boolean = {
     if (lastFile == null || !lastFile.equals(file)) {
       // clone: the scanner may reuse the UTF8String's backing buffer
       lastFile = file.clone()
-      refs.get(file.toString) match {
-        case Some(token) =>
-          lastBits = DeletionVectors.get(table, token, hconf)
-          lastHas = true
-        case None =>
-          lastBits = null
-          lastHas = false
-      }
+      val key = file.toString
+      lastBits = refs.get(key).fold(Array.empty[DeletionVectors.DvBits])(
+        DeletionVectors.cache.killSets(table, key, _, hconf))
     }
-    !lastHas || !lastBits.contains(ridx)
+    var i = 0
+    while (i < lastBits.length) {
+      if (lastBits(i).contains(ridx)) return false
+      i += 1
+    }
+    true
   }
 
   override def nullSafeEval(f: Any, r: Any): Any =
@@ -386,7 +452,7 @@ case class DvLive(left: Expression, right: Expression, table: String,
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
-    val dv = ctx.addReferenceObj("dvLive", this, classOf[DvLive].getName)
+    val dv = ctx.addReferenceObj("rowLive", this, classOf[RowLive].getName)
     nullSafeCodeGen(ctx, ev, (f, r) => s"${ev.value} = $dv.live($f, $r);")
   }
 

@@ -1123,7 +1123,7 @@ object DeltaInterop {
     if (dvAdds.isEmpty)
       scanAll(keepLineage)
     else {
-      // PER-FILE vector application ([[ForeignDvLive]]): the task
+      // PER-FILE vector application ([[RowLive]]): the task
       // scanning a file loads just ITS descriptor's bitmap
       // (executor-cached) and probes per row — no join, no Exchange,
       // the prior whole-scan anti-join's 100× read ceiling closed the
@@ -1133,13 +1133,9 @@ object DeltaInterop {
         normStr(new Path(table, a.path).toUri.toString) ->
           ForeignDv.deltaToken(a.dv.get)
       }.toMap
-      val env = spark.sparkContext.broadcast(
-        (refs, ForeignDv.hadoopConfMap(spark)))
-      import org.apache.spark.sql.graftbridge.ColumnBridge
       val filtered = scanAll(withLineage = true)
-        .filter(ColumnBridge.column(ForeignDvLive(
-          ColumnBridge.expression(col("__fp")),
-          ColumnBridge.expression(col("__pos")), table, env)))
+        .filter(DeletionVectors.livePredicate(spark, table, refs,
+          col("__fp"), col("__pos")))
       if (keepLineage) filtered else filtered.drop("__fp", "__pos")
     }
   }

@@ -1,12 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** PER-FILE application of FOREIGN merge-on-read kill sets — Delta
   * deletion vectors and Iceberg v2 position deletes — on the interop
@@ -19,11 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * This module reuses the native lake's answer ([[DeletionVectors]],
   * the audited fix of the same ceiling in r9): the task scanning a
   * file loads JUST THAT FILE's kill set (executor-globally cached
-  * under the shared LRU byte cap), and a codegen'd predicate probes a
-  * bitmap per row — no join, no Exchange, the scan's pushdown and
-  * whole-stage codegen untouched.
+  * under the shared LRU byte cap), and the codegen'd [[RowLive]]
+  * predicate probes a bitmap per row — no join, no Exchange, the
+  * scan's pushdown and whole-stage codegen untouched. This object
+  * holds the foreign tokens and their loaders;
+  * [[DeletionVectors.KillSetCache]] dispatches and caches them.
   *
-  * Two loaders, chosen per token:
+  * The loaders, chosen per token:
   *  - Delta (`D`-token): the add action's `deletionVector` descriptor
   *    — RoaringBitmap framing via [[DeltaDv.bitmapBytes]], one
   *    descriptor per data file by construction.
@@ -57,22 +53,6 @@ object ForeignDv {
     * position-delete parquet) compose with this separator. */
   val Multi = "\u0002"
 
-  private def fsConf(hconf: Map[String, String]): Configuration = {
-    val c = new Configuration()
-    hconf.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  /** The session's Hadoop conf as a serializable map — what the
-    * loaders rebuild a `Configuration` from inside executor tasks
-    * (the same propagation Spark itself uses for file access). */
-  def hadoopConfMap(spark: org.apache.spark.sql.SparkSession)
-      : Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-  }
-
   /** Strip a scheme prefix, keeping percent-escapes intact. */
   private def norm(s: String): String =
     s.replaceFirst("^[A-Za-z][A-Za-z0-9+.-]*:/+", "/")
@@ -84,200 +64,81 @@ object ForeignDv {
     if (raw == esc) Seq(raw) else Seq(raw, esc)
   }
 
-  /** One Delta descriptor's decoded bits, cached. */
-  private[sources] def deltaBits(table: String, token: String,
-      hconf: Map[String, String]): DeletionVectors.DvBits =
-    DeletionVectors.getWith(table + "\u0000" + token) {
-      val parts = token.split(Sep)
-      val d = DeltaDv.DvDescriptor(parts(1), parts(2),
-        parts(3).toLong, parts(4).toInt, parts(5).toLong)
-      val root = new Path(table)
-      val fs = root.getFileSystem(fsConf(hconf))
-      DeletionVectors.bitsOf(
-        DeltaDv.deserialize(DeltaDv.bitmapBytes(fs, root, d))
-          .distinct.sorted)
-    }
+  /** One Delta descriptor's decoded bits. */
+  private[sources] def loadDelta(table: String, token: String,
+      hconf: Map[String, String]): DeletionVectors.DvBits = {
+    val parts = token.split(Sep)
+    val d = DeltaDv.DvDescriptor(parts(1), parts(2),
+      parts(3).toLong, parts(4).toInt, parts(5).toLong)
+    val root = new Path(table)
+    val fs = root.getFileSystem(DeletionVectors.fsConf(hconf))
+    DeletionVectors.bitsFor(
+      DeltaDv.deserialize(DeltaDv.bitmapBytes(fs, root, d)).distinct.sorted)
+  }
 
-  /** One Iceberg v3 deletion vector's decoded bits, cached. The blob
-    * (at `content_offset`, spanning `content_size_in_bytes`) frames a
+  /** One Iceberg v3 deletion vector's decoded bits. The blob (at
+    * `content_offset`, spanning `content_size_in_bytes`) frames a
     * 4-byte big-endian length, the magic bytes D1 D3 39 64, a
     * STANDARD portable 64-bit roaring bitmap, and a big-endian CRC-32
     * of magic+vector ([[DeltaDv.deserializePortable64]] decodes the
     * bitmap). */
-  private[sources] def puffinBits(token: String,
-      hconf: Map[String, String]): DeletionVectors.DvBits =
-    DeletionVectors.getWith("puffin " + token) {
-      val parts = token.split(Sep)
-      val (path, offset, size) =
-        (parts(1), parts(2).toLong, parts(3).toInt)
-      val p = new Path(path)
-      val in = p.getFileSystem(fsConf(hconf)).open(p)
-      val payload =
-        try {
-          in.seek(offset)
-          val buf = new Array[Byte](size)
-          in.readFully(buf)
-          buf
-        } finally in.close()
-      val len = java.nio.ByteBuffer.wrap(payload, 0, 4).getInt()
-      require(len >= 4 && len + 8 <= payload.length,
-        s"malformed deletion-vector blob at $path:$offset — declared " +
-          s"length $len exceeds content size $size")
-      val magic = java.util.Arrays.copyOfRange(payload, 4, 8)
-      require(java.util.Arrays.equals(magic,
-        Array(0xD1.toByte, 0xD3.toByte, 0x39.toByte, 0x64.toByte)),
-        s"bad deletion-vector magic at $path:$offset")
-      val vector = java.util.Arrays.copyOfRange(payload, 8, 4 + len)
-      val crc = java.nio.ByteBuffer.wrap(payload, 4 + len, 4).getInt()
-      val check = new java.util.zip.CRC32
-      check.update(payload, 4, len)
-      require((check.getValue & 0xffffffffL) == (crc & 0xffffffffL),
-        s"deletion-vector blob at $path:$offset fails its CRC-32")
-      DeletionVectors.bitsOf(
-        DeltaDv.deserializePortable64(vector).distinct.sorted)
-    }
+  private[sources] def loadPuffin(token: String,
+      hconf: Map[String, String]): DeletionVectors.DvBits = {
+    val parts = token.split(Sep)
+    val (path, offset, size) =
+      (parts(1), parts(2).toLong, parts(3).toInt)
+    val p = new Path(path)
+    val in = p.getFileSystem(DeletionVectors.fsConf(hconf)).open(p)
+    val payload =
+      try {
+        in.seek(offset)
+        val buf = new Array[Byte](size)
+        in.readFully(buf)
+        buf
+      } finally in.close()
+    val len = java.nio.ByteBuffer.wrap(payload, 0, 4).getInt()
+    require(len >= 4 && len + 8 <= payload.length,
+      s"malformed deletion-vector blob at $path:$offset — declared " +
+        s"length $len exceeds content size $size")
+    val magic = java.util.Arrays.copyOfRange(payload, 4, 8)
+    require(java.util.Arrays.equals(magic,
+      Array(0xD1.toByte, 0xD3.toByte, 0x39.toByte, 0x64.toByte)),
+      s"bad deletion-vector magic at $path:$offset")
+    val vector = java.util.Arrays.copyOfRange(payload, 8, 4 + len)
+    val crc = java.nio.ByteBuffer.wrap(payload, 4 + len, 4).getInt()
+    val check = new java.util.zip.CRC32
+    check.update(payload, 4, len)
+    require((check.getValue & 0xffffffffL) == (crc & 0xffffffffL),
+      s"deletion-vector blob at $path:$offset fails its CRC-32")
+    DeletionVectors.bitsFor(
+      DeltaDv.deserializePortable64(vector).distinct.sorted)
+  }
 
   /** One Iceberg position-delete FILE decoded to a per-data-file bits
-    * map, cached executor-globally (keyed by the delete path — a new
-    * delete commit is a new path, so entries age out naturally under
-    * the LRU cap riding [[IcebergDeleteCache]]). */
-  private[sources] def icebergDeleteMap(delPath: String,
-      hconf: Map[String, String]): Map[String, DeletionVectors.DvBits] =
-    IcebergDeleteCache.get(delPath) {
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
-      val acc = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new Path(delPath))
-        .withConf(fsConf(hconf)).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val fp = g.getBinary("file_path", 0).toStringUsingUTF8
-          val pos = g.getLong("pos", 0)
-          val buf = acc.getOrElseUpdate(norm(fp),
-            scala.collection.mutable.ArrayBuffer.empty[Long])
-          buf += pos
-          g = reader.read()
-        }
-      } finally reader.close()
-      acc.iterator.flatMap { case (fp, buf) =>
-        val bits = DeletionVectors.bitsOf(buf.toArray.distinct.sorted)
-        forms(fp).map(_ -> bits)
-      }.toMap
-    }
-
-  /** Executor-global LRU of decoded Iceberg delete files (byte-capped
-    * like [[DeletionVectors]]' store; -Dgraft.dv.cache.bytes shares
-    * the knob). */
-  private object IcebergDeleteCache {
-    private val capBytes: Long =
-      sys.props.get("graft.dv.cache.bytes").map(_.toLong)
-        .getOrElse(256L * 1024 * 1024)
-    private var totalBytes = 0L
-    private val cache = new java.util.LinkedHashMap[
-      String, Map[String, DeletionVectors.DvBits]](16, 0.75f, true)
-    private def sizeOf(m: Map[String, DeletionVectors.DvBits]): Long =
-      m.valuesIterator.map(_.sizeBytes).sum + 64L * m.size
-
-    def get(key: String)(
-        loader: => Map[String, DeletionVectors.DvBits])
-        : Map[String, DeletionVectors.DvBits] = {
-      cache.synchronized {
-        val hit = cache.get(key)
-        if (hit != null) return hit
+    * map, keyed by both spellings of each data file's path. */
+  private[sources] def loadDeleteFile(delPath: String,
+      hconf: Map[String, String]): Map[String, DeletionVectors.DvBits] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val acc = scala.collection.mutable.Map
+      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+    val reader = ParquetReader
+      .builder(new GroupReadSupport(), new Path(delPath))
+      .withConf(DeletionVectors.fsConf(hconf)).build()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        val fp = g.getBinary("file_path", 0).toStringUsingUTF8
+        val pos = g.getLong("pos", 0)
+        val buf = acc.getOrElseUpdate(norm(fp),
+          scala.collection.mutable.ArrayBuffer.empty[Long])
+        buf += pos
+        g = reader.read()
       }
-      val m = loader
-      cache.synchronized {
-        val prev = cache.putIfAbsent(key, m)
-        if (prev != null) prev
-        else {
-          totalBytes += sizeOf(m)
-          val it = cache.entrySet().iterator()
-          while (totalBytes > capBytes && cache.size() > 1 && it.hasNext) {
-            val e = it.next()
-            if (e.getKey != key) {
-              totalBytes -= sizeOf(e.getValue)
-              it.remove()
-            }
-          }
-          m
-        }
-      }
-    }
+    } finally reader.close()
+    acc.iterator.flatMap { case (fp, buf) =>
+      val bits = DeletionVectors.bitsFor(buf.toArray.distinct.sorted)
+      forms(fp).map(_ -> bits)
+    }.toMap
   }
-}
-
-/** Is row (`file`, `ridx`) LIVE under a FOREIGN table's merge-on-read
-  * kill sets? The interop counterpart of [[DvLive]]: evaluated inside
-  * the scan's codegen stage with a per-task last-file memo — one
-  * virtual call + bitmap probe(s) per row, no join in the plan.
-  * `refs` (file path → dialect token) and the Hadoop conf ride a
-  * broadcast, O(1) per expression instance. */
-case class ForeignDvLive(left: Expression, right: Expression,
-    table: String,
-    env: org.apache.spark.broadcast.Broadcast[
-      (Map[String, String], Map[String, String])])
-    extends BinaryExpression {
-
-  private def refs: Map[String, String] = env.value._1
-  private def hconf: Map[String, String] = env.value._2
-
-  override def dataType: DataType = BooleanType
-
-  override def prettyName: String = "foreign_dv_live"
-
-  override def stringArgs: Iterator[Any] =
-    Iterator(left, right, table, s"${refs.size} keyed file(s)")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string file, long row_index), got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  @transient private var lastFile: UTF8String = _
-  @transient private var lastBits: Array[DeletionVectors.DvBits] = _
-
-  def live(file: UTF8String, ridx: Long): Boolean = {
-    if (lastFile == null || !lastFile.equals(file)) {
-      lastFile = file.clone() // scanner reuses the backing buffer
-      val key = file.toString
-      lastBits = refs.get(key) match {
-        case None => Array.empty
-        case Some(value) => value.split(ForeignDv.Multi).flatMap {
-          case tok if tok.startsWith("D") =>
-            Array(ForeignDv.deltaBits(table, tok, hconf))
-          case tok if tok.startsWith("P") =>
-            Array(ForeignDv.puffinBits(tok, hconf))
-          case tok => // I-token: probe each delete file's map
-            tok.split(ForeignDv.Sep).drop(1).flatMap(del =>
-              ForeignDv.icebergDeleteMap(del, hconf).get(key))
-        }
-      }
-    }
-    var i = 0
-    while (i < lastBits.length) {
-      if (lastBits(i).contains(ridx)) return false
-      i += 1
-    }
-    true
-  }
-
-  override def nullSafeEval(f: Any, r: Any): Any =
-    live(f.asInstanceOf[UTF8String], r.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val dv = ctx.addReferenceObj("foreignDvLive", this,
-      classOf[ForeignDvLive].getName)
-    nullSafeCodeGen(ctx, ev, (f, r) => s"${ev.value} = $dv.live($f, $r);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

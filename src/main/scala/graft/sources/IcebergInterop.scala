@@ -183,7 +183,8 @@ object IcebergInterop {
   /** `posDeletes` are v2 POSITION-DELETE parquet files (rows of
     * `(file_path, pos)`) the read must kill per file; `dvDeletes` are
     * v3 deletion vectors (Puffin blobs, one per referenced data
-    * file); `eqDeletes` are value-keyed and sequence-ordered. */
+    * file); `eqDeletes` are value-keyed and sequence-ordered. `table`
+    * is the path the state was resolved from (what read plans name). */
   final case class IceState(metadataVersion: Long, snapshotId: Long,
                             schema: StructType, files: Seq[IceFile],
                             posDeletes: Seq[String] = Nil,
@@ -194,7 +195,8 @@ object IcebergInterop {
                             formatVersion: Int = 1,
                             dvDeletes: Seq[IceDvDelete] = Nil,
                             defaultSortOrderId: Int = 0,
-                            sortFields: Seq[IceSortField] = Nil)
+                            sortFields: Seq[IceSortField] = Nil,
+                            table: String = "")
 
   private def hadoopFs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -849,7 +851,7 @@ object IcebergInterop {
         st.dvDeletes.isEmpty)
         return (if (keepLineage) keyed else keyed.drop("__fp", "__pos"))
       // v2 merge-on-read, POSITION deletes: PER-FILE application
-      // ([[ForeignDvLive]]) — the task scanning a data file probes
+      // ([[RowLive]]) — the task scanning a data file probes
       // only its own kill set; each delete FILE decodes once per
       // executor into a (data file → bitmap) map under the shared
       // LRU cap. `_metadata.row_index` supplies the position; no
@@ -883,12 +885,8 @@ object IcebergInterop {
                 else Some(k -> toks.mkString(ForeignDv.Multi))
               }
             }.toMap
-          val env = spark.sparkContext.broadcast(
-            (refs, ForeignDv.hadoopConfMap(spark)))
-          import org.apache.spark.sql.graftbridge.ColumnBridge
-          keyed.filter(ColumnBridge.column(ForeignDvLive(
-            ColumnBridge.expression(col("__fp")),
-            ColumnBridge.expression(col("__pos")), "iceberg", env)))
+          keyed.filter(DeletionVectors.livePredicate(spark, st.table, refs,
+            col("__fp"), col("__pos")))
         }
       // EQUALITY deletes: a delete row kills every data row whose key
       // columns match (null-safe) in files with a STRICTLY SMALLER
@@ -1029,7 +1027,7 @@ object IcebergInterop {
             .map(t => t._2 -> t._1).toMap,
           schemaFieldTriples, snapshotSchemaIds,
           initialDefaults, writeDefaults),
-        formatVersion = formatVersion.toInt)
+        formatVersion = formatVersion.toInt, table = table)
     val snap = snapshots.find(s => jLong(s \ "snapshot-id") == snapId)
       .getOrElse(throw new IllegalArgumentException(
         s"snapshot $snapId not found in $table (have " +
@@ -1339,7 +1337,7 @@ object IcebergInterop {
         schemaFieldTriples, snapshotSchemaIds,
         initialDefaults, writeDefaults),
       formatVersion.toInt, dvDeletes.result(),
-      defaultSortId, sortFields)
+      defaultSortId, sortFields, table)
   }
 
   /** An entry's `lower_bounds`/`upper_bounds` map decoded to the

@@ -233,7 +233,7 @@ object LakeQueries {
     * to completion with AvailableNow into a memory sink. Each committed
     * version arrives as its own micro-batch resolved from the version's
     * delta record (O(new files), no snapshot resolution — the plumbing
-    * is [[LakeSource]]), and the union of the batches must equal one
+    * is [[LakeStreamProvider]]), and the union of the batches must equal one
     * batch read of the table — which is exactly what the DuckDB oracle
     * re-derives from the original orders parquet. Restart/resume
     * semantics (checkpointed version watermark, no re-emission) are

@@ -691,7 +691,7 @@ object ManifestLake {
       if (plain.isEmpty) None
       else Some(rawRead(spark, table, schema, plain.map(_.path)))
     // Files with a deletion vector apply it PER FILE, inside the task
-    // scanning that file: the [[DvLive]] predicate loads the scanned
+    // scanning that file: the [[RowLive]] predicate loads the scanned
     // file's own sidecar block (manifest token = rel#offset#length) and
     // probes a bitmap per row — no join, no broadcast, nothing
     // materialized driver-side, so a mass delete's vectors cost each
@@ -717,77 +717,16 @@ object ManifestLake {
 
   /** THE deletion-vector filter, shared by [[readEntries]] and
     * [[provenanceScan]] so the key contract (unique staged basenames +
-    * row index) lives in one place: a [[DvLive]] predicate carrying
-    * each vectored file's `dv=` block token — evaluation loads the
-    * SCANNED file's block inside the scanning task (executor-global
-    * cached) and probes per row, replacing the r8 global broadcast
-    * anti-join that materialized every file's pairs on the driver. */
+    * row index) lives in one place: each vectored file's `dv=` block
+    * token, keyed by basename, under [[DeletionVectors.livePredicate]]. */
   private def dvLivePredicate(spark: SparkSession, table: String,
                               entries: Seq[FileEntry],
                               fileCol: org.apache.spark.sql.Column,
                               ridxCol: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val refs = entries.flatMap(e =>
-      e.dv.map(t => e.path.split('/').last -> t)).toMap
-    val conf = hadoopConfMap(spark)
-    val sc = spark.sparkContext
-    // ONE broadcast per (table, DV state), not per read: a long-lived
-    // session re-reading the same table reuses the cached broadcast
-    // instead of accumulating blocks until GC + ContextCleaner catch
-    // up. Reuse rule: every (basename → token) THIS read needs must be
-    // present UNCHANGED in the cached map (pruned reads are subsets of
-    // the snapshot's DV state, so alternating probes of different cells
-    // all hit the same broadcast; a re-annotated file changes its token
-    // and forces the rebuild), under the SAME SparkContext (a broadcast
-    // outlives neither its context nor a session recycle) and the same
-    // Hadoop conf (rotated fs credentials must reach the loader). The
-    // rebuild merges so the superset keeps serving future subsets, and
-    // resets once dead basenames dominate; the superseded broadcast is
-    // unpersisted (non-blocking — executors re-fetch from the driver if
-    // an in-flight task still holds it).
-    val env = dvBroadcastCache.compute(table, (_, cached) => cached match {
-      case c: DvEnvCache if (c.sc eq sc) && !sc.isStopped &&
-        c.conf == conf &&
-        refs.forall { case (k, v) => c.refs.get(k).contains(v) } => c
-      case c =>
-        if (c != null && (c.sc eq sc))
-          scala.util.Try(c.bc.unpersist(false))
-        val merged =
-          if (c == null || c.conf != conf || !(c.sc eq sc) ||
-            c.refs.size > 4 * math.max(1, refs.size)) refs
-          else c.refs ++ refs
-        DvEnvCache(sc, merged, conf, sc.broadcast((merged, conf)))
-    }).bc
-    ColumnBridge.column(DvLive(
-      ColumnBridge.expression(fileCol), ColumnBridge.expression(ridxCol),
-      table, env))
-  }
-
-  /** One [[dvBroadcastCache]] entry: the owning context, the accumulated
-    * (basename → dv token) map the broadcast carries, the Hadoop conf it
-    * was built with, and the broadcast itself. */
-  private final case class DvEnvCache(sc: org.apache.spark.SparkContext,
-      refs: Map[String, String], conf: Map[String, String],
-      bc: org.apache.spark.broadcast.Broadcast[(Map[String, String],
-        Map[String, String])])
-
-  /** Per-table cache behind [[dvLivePredicate]]. Bounded by the number
-    * of distinct vectored tables a JVM touches; superseded entries are
-    * unpersisted on replacement (same-context only — a dead context's
-    * blocks are already gone with it). */
-  private val dvBroadcastCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DvEnvCache]()
-
-  /** The session's Hadoop conf as a serializable map — what the DV
-    * loader rebuilds a `Configuration` from inside executor tasks (the
-    * same propagation Spark itself uses for file access; local runs
-    * only need the defaults, a real cluster carries its fs.* keys). */
-  private def hadoopConfMap(spark: SparkSession): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-  }
+      : org.apache.spark.sql.Column =
+    DeletionVectors.livePredicate(spark, table,
+      entries.flatMap(e => e.dv.map(t => e.path.split('/').last -> t)).toMap,
+      fileCol, ridxCol)
 
   /** The raw (no DV applied) multi-file parquet read of snapshot
     * files — basePath for Hive partition reconstruction, the declared
@@ -3039,7 +2978,7 @@ object ManifestLake {
     * file costs one tiny sidecar write instead of a 1 GB rewrite, which
     * at 100 TB is the difference between interactive and hopeless.
     * Reads apply each file's vector INSIDE the task scanning it (the
-    * [[DvLive]] predicate seeks the file's own sidecar block — no join,
+    * [[RowLive]] predicate seeks the file's own sidecar block — no join,
     * no broadcast); COUNT(*) stays metadata-only via the recorded
     * `dvrows=`; compaction and any later copy-on-write DML over the
     * file MATERIALIZE the vector (their reads are DV-aware, their
@@ -3727,7 +3666,7 @@ object ManifestLake {
       pairs: DataFrame): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val hconf = hadoopConfMap(spark)
+    val hconf = DeletionVectors.hadoopConfMap(spark)
     val oldRefs = touched.flatMap(e =>
       e.dv.map(t => e.path.split('/').last -> t))
     val fresh = pairs.select(col("file_name"),
@@ -4371,7 +4310,7 @@ object ManifestLake {
                                  maintenance: Boolean = false)
 
   /** Per-version change records in `(fromExclusive, toInclusive]`,
-    * ascending — the incremental-consumption API ([[LakeSource]] reads
+    * ascending — the incremental-consumption API ([[LakeStreamProvider]] reads
     * the lake as a stream through it). O(versions in range): each
     * version costs one bounded manifest read; no snapshot resolution,
     * no checkpoint walk, no directory listing. Raises if a manifest in

@@ -6,7 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Pins the PER-FILE foreign kill-set application ([[ForeignDvLive]]):
+/** Pins the PER-FILE foreign kill-set application ([[RowLive]]):
   * a vectored Delta read and a position-deleted Iceberg read plan NO
   * Exchange (the r12 whole-scan anti-join is structurally gone — the
   * same done-criterion the native lake met in r9), results stay exact
@@ -28,7 +28,7 @@ class ForeignDvSpec extends AnyFunSuite with Matchers with SparkSpec {
     val df = DeltaInterop.read(spark, t)
     val plan = df.queryExecution.executedPlan.toString
     plan should not include "Exchange"
-    plan should include("foreign_dv_live")
+    plan should include("dv_live")
     df.count() shouldBe (1L to 1000L)
       .count(i => i % 10 != 0 && i % 7 != 0)
     df.filter($"id" % 10 === 0 || $"id" % 7 === 0).count() shouldBe 0L
@@ -51,7 +51,7 @@ class ForeignDvSpec extends AnyFunSuite with Matchers with SparkSpec {
     val df = IcebergInterop.read(spark, t)
     val plan = df.queryExecution.executedPlan.toString
     plan should not include "Exchange"
-    plan should include("foreign_dv_live")
+    plan should include("dv_live")
     df.count() shouldBe (1L to 1000L)
       .count(i => i % 10 != 0 && i % 7 != 0)
     df.filter($"id" % 10 === 0 || $"id" % 7 === 0).count() shouldBe 0L

@@ -241,7 +241,7 @@ class IcebergV3DvSpec extends AnyFunSuite with Matchers with SparkSpec {
     val df = IcebergInterop.read(spark, t)
     val plan = df.queryExecution.executedPlan.toString
     plan should not include "Exchange"
-    plan should include("foreign_dv_live")
+    plan should include("dv_live")
     // f1 holds ids 0..9 at positions 0..9 — ids 1,3,7 die; f2 intact
     df.count() shouldBe 17L
     df.select($"id").as[Long].collect().sorted shouldBe
