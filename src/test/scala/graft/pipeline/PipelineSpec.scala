@@ -78,11 +78,11 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("step retry: recovers after transient failures, reports attempts") {
-    var calls = 0
+    // the three fetch steps call the client concurrently
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val flaky = new FeedClient {
       def fetch(feed: Feed): Array[Byte] = {
-        calls += 1
-        if (calls < 3) throw new RuntimeException("transient")
+        if (calls.incrementAndGet() < 3) throw new RuntimeException("transient")
         fixtureClient.fetch(feed)
       }
     }

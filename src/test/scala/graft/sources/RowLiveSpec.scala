@@ -95,7 +95,7 @@ class RowLiveSpec extends AnyFunSuite with Matchers with SparkSpec {
       (nextBroadcastId() - before - 1) should be <= 1L
       reads.flatMap(envIds).distinct should have size 1
       reads.last.queryExecution.executedPlan.toString should include(
-        s"dv_live")
+        "dv_live")
       reads.last.queryExecution.analyzed.toString should include(t)
       reads.last.count() shouldBe 900L
     }
