@@ -196,7 +196,7 @@ object IcebergInterop {
                             dvDeletes: Seq[IceDvDelete] = Nil,
                             defaultSortOrderId: Int = 0,
                             sortFields: Seq[IceSortField] = Nil,
-                            table: String = "")
+                            table: String)
 
   private def hadoopFs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -7753,7 +7753,7 @@ object IcebergInterop {
     }
     Some(IceState(version, jLong(metaJson \ "current-snapshot-id"),
       schema, Nil, specs = specs, defaultSpecId = defaultSpecId,
-      formatVersion = 1))
+      formatVersion = 1, table = table))
   }
 
   /** INCREMENTAL mirror publication for [[UniForm]]: one Iceberg

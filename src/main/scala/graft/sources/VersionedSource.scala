@@ -27,9 +27,16 @@ private[sources] trait VersionLog {
   /** The exclusive lower bound for a numeric start option. */
   def startAfter(position: Long): Long
 
+  /** The lag metric: how many commits follow `from`. Total — progress
+    * reporting never raises; a `from` the log no longer holds raises
+    * on the next trigger's [[between]] or [[batch]] instead. */
+  def lag(from: Option[Long]): Long = between(from, None).size
+
   /** The rows of the commits in `(from, to]` as a batch (not yet
-    * streaming) plan, or `None` when they add no rows. Raises the
-    * format's named error for a commit it cannot stream. */
+    * streaming) plan over file relations, or `None` when they add no
+    * rows. Raises the format's named error for a commit it cannot
+    * stream; a plan with no file relation fails the engine's
+    * isStreaming check rather than stream empty. */
   def batch(from: Option[Long], to: Long): Option[DataFrame]
 }
 
@@ -114,11 +121,9 @@ final class VersionedSource(spark: SparkSession, log: VersionLog,
 
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val from = start.map(o => positionOf(o.json)).orElse(boundary)
-    // a range with no rows yields a local frame (or none) that
-    // asStreaming cannot re-mark, yet the engine asserts isStreaming
     log.batch(from, positionOf(end.json))
-      .map(StreamBridge.asStreaming(_)).filter(_.isStreaming)
-      .getOrElse(StreamBridge.emptyStreaming(spark, schema))
+      .fold(StreamBridge.emptyStreaming(spark, schema))(
+        StreamBridge.asStreaming(_))
   }
 
   override def metrics(latestConsumedOffset: java.util.Optional[Offset])
@@ -128,7 +133,7 @@ final class VersionedSource(spark: SparkSession, log: VersionLog,
         Some(positionOf(latestConsumedOffset.get.json))
       else boundary
     java.util.Collections.singletonMap(log.lagMetric,
-      log.between(consumed, None).size.toString)
+      log.lag(consumed).toString)
   }
 
   override def stop(): Unit = ()
@@ -331,8 +336,12 @@ private final class DeltaLog(spark: SparkSession, val table: String,
     // the feed's refusals (feed disabled, DV derivation, mid-range
     // schema change) surfacing as stream failures rather than wrong
     // rows; removes ARE the deletes here, so ignoreChanges is moot
-    if (readChangeFeed)
-      return Some(DeltaInterop.changeFeed(spark, table, first, to))
+    if (readChangeFeed) {
+      // a range of metadata-only commits yields a LOCAL empty frame
+      // that asStreaming cannot re-mark
+      val cf = DeltaInterop.changeFeed(spark, table, first, to)
+      return Some(cf).filter(StreamBridge.asStreaming(_).isStreaming)
+    }
     val added = (first to to).flatMap { v =>
       val ch = DeltaInterop.changesAt(spark, table, v)
       if (ch.removed.nonEmpty && v != 0 && !ignoreChanges)
@@ -387,6 +396,12 @@ private final class IcebergLog(spark: SparkSession, val table: String,
 
   /** An exclusive start: the stream anchors AFTER the named snapshot. */
   def startAfter(position: Long): Long = position
+
+  /** An expired `from` counts the whole lineage as behind. */
+  override def lag(from: Option[Long]): Long = {
+    val l = IcebergInterop.snapshotLineage(spark, table)
+    l.length - from.fold(0)(id => l.indexOf(id) + 1)
+  }
 
   /** Lineage strictly after `from`; a from-id no longer in the lineage
     * refuses by name — it was expired, and guessing a restart point

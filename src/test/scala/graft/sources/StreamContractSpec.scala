@@ -2,6 +2,10 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.avro.Schema
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +19,9 @@ import graft.SparkSpec
   * restart that resumes without re-emitting, and the named rewrite
   * refusal with its `ignoreChanges` opt-in. Each format keeps its own
   * option spellings and its own numeric-start rule (inclusive version
-  * for the lake and Delta, exclusive snapshot id for Iceberg). */
+  * for the lake and Delta, exclusive snapshot id for Iceberg). A
+  * commit the stream cannot read fails the query; it never streams as
+  * an empty batch. */
 class StreamContractSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private def freshDir(prefix: String): String =
@@ -132,5 +138,92 @@ class StreamContractSpec extends AnyFunSuite with Matchers with SparkSpec {
       ids(f, t, freshDir("ck"), Map("ignoreChanges" -> "true"))
         .sorted shouldBe ((1L to 10L) ++ (101L to 105L))
     }
+  }
+
+  test("graft-iceberg: snapshotsBehind stays total when the consumed " +
+    "snapshot is no longer in the lineage") {
+    val t = freshDir("graft-contract-lag") + "/t"
+    val s1 = IcebergInterop.write(rows(1 to 5), t)
+    IcebergInterop.write(rows(6 to 10), t)
+    val log = new IcebergStreamProvider().open(spark, t, None, Map.empty)
+    log.lag(None) shouldBe 2
+    log.lag(Some(s1)) shouldBe 1
+    // an expired id counts the whole lineage; the named error is left
+    // to the next trigger's offset planning
+    log.lag(Some(-42L)) shouldBe 2
+    an[IllegalArgumentException] should be thrownBy log.between(Some(-42L), None)
+  }
+
+  test("graft-iceberg: a snapshot of AVRO data files (the add_files " +
+    "shape) fails the stream by name instead of committing an empty " +
+    "batch") {
+    val t = freshDir("graft-contract-avro") + "/t"
+    val fs = new Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+    def parse(json: String) = new Schema.Parser().parse(json)
+    def avro(rel: String, schema: Schema,
+             recs: Seq[GenericRecord]): (String, Long) = {
+      val p = new Path(t, rel)
+      fs.mkdirs(p.getParent)
+      val w = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](schema))
+      w.create(schema, fs.create(p, true))
+      try recs.foreach(w.append) finally w.close()
+      (p.toString, fs.getFileStatus(p).getLen)
+    }
+    def record(schema: Schema, fields: (String, Any)*): GenericRecord = {
+      val r = new GenericData.Record(schema)
+      fields.foreach { case (k, v) => r.put(k, v) }
+      r
+    }
+    val rowSchema = parse("""{"type":"record","name":"row","fields":[
+      |{"name":"id","type":["null","long"],"default":null}]}""".stripMargin)
+    val (data, dataLen) = avro("data/f1.avro", rowSchema,
+      (1L to 5L).map(i => record(rowSchema, "id" -> i)))
+    val entrySchema = parse(
+      """{"type":"record","name":"manifest_entry","fields":[
+        |{"name":"status","type":"int"},
+        |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
+        |  {"name":"file_path","type":"string"},
+        |  {"name":"file_format","type":"string"},
+        |  {"name":"partition","type":{"type":"record","name":"rp",
+        |    "fields":[]}},
+        |  {"name":"record_count","type":"long"},
+        |  {"name":"file_size_in_bytes","type":"long"}
+        |]}}]}""".stripMargin)
+    val fileSchema = entrySchema.getField("data_file").schema()
+    val (manifest, manifestLen) = avro("metadata/m1.avro", entrySchema,
+      Seq(record(entrySchema, "status" -> 1, "data_file" ->
+        record(fileSchema, "file_path" -> data, "file_format" -> "AVRO",
+          "partition" -> record(fileSchema.getField("partition").schema()),
+          "record_count" -> 5L, "file_size_in_bytes" -> dataLen))))
+    val listSchema = parse(
+      """{"type":"record","name":"manifest_file","fields":[
+        |{"name":"manifest_path","type":"string"},
+        |{"name":"manifest_length","type":"long"},
+        |{"name":"partition_spec_id","type":"int"}]}""".stripMargin)
+    val (list, _) = avro("metadata/snap-50.avro", listSchema,
+      Seq(record(listSchema, "manifest_path" -> manifest,
+        "manifest_length" -> manifestLen, "partition_spec_id" -> 0)))
+    val meta = fs.create(new Path(t, "metadata/v1.metadata.json"), true)
+    try meta.write(
+      s"""{"format-version":1,"table-uuid":"av","location":"$t",
+         |"last-updated-ms":1,"last-column-id":1,"current-schema-id":0,
+         |"schemas":[{"type":"struct","schema-id":0,"fields":[
+         |{"id":1,"name":"id","required":false,"type":"long"}]}],
+         |"partition-specs":[{"spec-id":0,"fields":[]}],
+         |"default-spec-id":0,"properties":{},"current-snapshot-id":50,
+         |"snapshots":[{"snapshot-id":50,"timestamp-ms":1,
+         |"summary":{"operation":"append"},
+         |"manifest-list":"$list","schema-id":0}]}""".stripMargin
+        .replace("\n", "").getBytes("UTF-8"))
+    finally meta.close()
+    // a batch read serves the rows ...
+    IcebergInterop.read(spark, t).count() shouldBe 5L
+    // ... and the stream refuses the snapshot rather than lose them
+    val err = intercept[StreamingQueryException] {
+      ids(formats.last, t, freshDir("ck"))
+    }
+    err.getCause.getMessage should include("AVRO")
+    err.getCause.getMessage should include(t)
   }
 }
