@@ -2348,12 +2348,19 @@ object DeltaInterop {
     * target provably small under
     * [[ManifestLake.NmbsSmallTableBytesConf]].
     *
-    * Scale shape: one key-column scan (column-pruned) finds
-    * key-matched files; the NMBS scope prunes on recorded
-    * stats/partition values before one anti-join scan finds
-    * clause-fired files; ONLY files holding a fired row rewrite;
-    * the insert anti-join rides the same pruned key scan. AQE
-    * broadcasts a small source. */
+    * Scale shape ([[MergeClauses]]' three passes over the persisted
+    * source): one job over the source keys gives the duplicate-key
+    * verdict; one key-column scan (column-pruned) semi-joined with
+    * the source keys finds the key-matched files and keeps the
+    * matched keys; one left join of the rewritten files' rows with
+    * the source, unioned with the inserts (the source rows anti-joined
+    * with the kept matched keys), feeds the data write, the CDC write
+    * and the row counts (an `Observation` on the data write). The NMBS
+    * scope prunes on recorded stats/partition values before one
+    * anti-join scan finds clause-fired files; ONLY files holding a
+    * fired row rewrite. AQE broadcasts a small source. On a 20,000-row,
+    * 4-file table with CDF on and a 200-row change batch that is 9
+    * Spark jobs (`MergeJobsSpec`). */
   def mergeApply(source: DataFrame, table: String, keyCols: Seq[String],
                  matched: Seq[ManifestLake.MergeMatched],
                  notMatched: Seq[ManifestLake.MergeInsert] = Nil,
@@ -2369,10 +2376,11 @@ object DeltaInterop {
     * replay per statement whatever the entry point (merge() checks
     * schema compatibility against the SAME state it merges). The
     * source is persisted for the statement: its plan feeds the
-    * key-uniqueness guard, the touched-file scans, the staging job
-    * and the CDC images, and a nondeterministic source re-executed
-    * per job could commit rows that disagree with its own images
-    * (the lake's mergeApply discipline). */
+    * key-uniqueness guard, the touched-file scans and the rewrite
+    * join, and a nondeterministic source re-executed per job could
+    * commit rows that disagree with its own images (the lake's
+    * mergeApply discipline). The commit records delta-spark's MERGE
+    * `operationMetrics`. */
   private def mergeApplyResolved(st: DeltaState, source: DataFrame,
       table: String, keyCols: Seq[String],
       matched: Seq[ManifestLake.MergeMatched],
@@ -2412,13 +2420,11 @@ object DeltaInterop {
     val root = new Path(table)
     val fs = hadoopFs(spark, root)
     import spark.implicits._
-    val cached = source.select(source.columns.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stmt = new MergeClauses.Statement(source)
     try {
       // nondeterministic-merge guard: a key matched by 2+ source rows
-      val dup = cached.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1)
-      require(dup.isEmpty,
+      val summary = MergeClauses.summarize(stmt, keyCols)
+      require(summary.duplicate.isEmpty,
         s"MERGE source has duplicate key rows on " +
           s"(${keyCols.mkString(", ")}) — which one updates the target " +
           "is undefined; deduplicate the source first")
@@ -2435,18 +2441,20 @@ object DeltaInterop {
             "true. Tables whose recorded size fits " +
             s"${ManifestLake.NmbsSmallTableBytesConf} run whole-table " +
             "automatically.")
-      val srcKeys = cached.select(keyCols.map(col): _*).distinct()
-      // one key-column scan: files holding a key match (skipped when no
-      // clause can fire on a matched row — an NMBS-only sync never
-      // rewrites key-matched files)
-      def liveKeys = filesToDF(spark, table, st.schema,
-        st.partitionColumns, st.files, st.columnMappingMode,
-        keepLineage = true)
-        .select((keyCols.map(col) :+ col("__fp")).toIndexedSeq: _*)
+      // one key-column scan: the files holding a key match and the
+      // matched keys the insert anti-join reads (skipped when no clause
+      // can use them — an NMBS-only sync never rewrites key-matched
+      // files)
+      val pr =
+        if (matched.isEmpty && notMatched.isEmpty)
+          MergeClauses.noProbe(stmt, keyCols)
+        else MergeClauses.probe(stmt, filesToDF(spark, table, st.schema,
+          st.partitionColumns, st.files, st.columnMappingMode,
+          keepLineage = true)
+          .select((keyCols.map(col) :+ col("__fp")).toIndexedSeq: _*),
+          "__fp", keyCols)
       val touchedNames: Set[String] =
-        if (matched.isEmpty) Set.empty
-        else liveKeys.join(srcKeys, keyCols).select(col("__fp")).distinct()
-          .as[String].collect().toSet
+        if (matched.isEmpty) Set.empty else pr.files
       val touched = st.files.filter(a => touchedNames(uriKey(root, a.path)))
       // NMBS-fired files: scope-pruned candidates, one anti-join scan
       val nmbsTouched: Seq[DeltaAdd] =
@@ -2473,7 +2481,8 @@ object DeltaInterop {
             val hit = filesToDF(spark, table, st.schema,
               st.partitionColumns, cands.toIndexedSeq,
               st.columnMappingMode, keepLineage = true)
-              .join(srcKeys, keyCols, "left_anti")
+              .join(stmt.cached.select(keyCols.map(col): _*).distinct(),
+                keyCols, "left_anti")
               .where(rowScope)
               .withColumn("__nact",
                 MergeClauses.actionIndex(notMatchedBySource))
@@ -2513,21 +2522,16 @@ object DeltaInterop {
                 col("__rt_base") + col("__pos")).as(ridN),
               coalesce(col(s"`$rcvN`"), col("__rt_dcv")).as(rcvN))): _*)
         }
-      val notMatchedSrc =
-        if (notMatched.isEmpty) cached.filter(lit(false))
-        else cached.join(liveKeys.drop("__fp").distinct(), keyCols,
-          "left_anti")
-      val applied = MergeClauses(currentRows, cached, keyCols, st.schema,
+      val cdfOn = st.configuration
+        .get("delta.enableChangeDataFeed").contains("true")
+      val ap = MergeClauses(currentRows, stmt, keyCols, st.schema,
         matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
-        notMatchedSrc,
+        pr.matchedKeys, keep = cdfOn,
         extraCarry = rtFields,
         stampUpdated =
           if (!rowTracking) Map.empty
           else Map(rtNames.get._2 ->
             lit(version).cast(LongType)))
-      val outRows = applied.survivors.unionByName(applied.inserts)
-      val cdfOn = st.configuration
-        .get("delta.enableChangeDataFeed").contains("true")
       // stage through the same partition-dir layout as write()
       // (physical column names and dirs on mapped tables)
       val mapped = st.columnMappingMode != "none"
@@ -2536,9 +2540,9 @@ object DeltaInterop {
         if (mapped) st.partitionColumns.map(physKey) else st.partitionColumns
       val stage = new Path(root, s".merge-${java.util.UUID.randomUUID()}")
       val stagedFrame = stampCompatIds(
-        if (mapped) toPhysical(outRows, st.schema,
+        if (mapped) toPhysical(ap.written, st.schema,
           passThrough = rtFields.map(_.name))
-        else outRows, st)
+        else ap.written, st)
       val w = stagedFrame.write.mode("overwrite")
       (if (partitionDirs.nonEmpty)
          w.partitionBy(partitionDirs: _*)
@@ -2549,9 +2553,6 @@ object DeltaInterop {
         if (mapped) physicalStruct(dataSchema) else dataSchema
       val now = System.currentTimeMillis()
       val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      lines += s"""{"commitInfo":{"timestamp":$now,"operation":${
-        jstr("MERGE")},"operationParameters":{},"engineInfo":${
-        jstr("graft")}}}"""
       txn.foreach { case (appId, v) =>
         lines += s"""{"txn":{"appId":${jstr(appId)},"version":$v,""" +
           s""""lastUpdated":$now}}"""
@@ -2598,39 +2599,48 @@ object DeltaInterop {
       rewriteSet.foreach(a =>
         lines += s"""{"remove":{"path":${jstr(urlEncode(a.path))},""" +
           s""""deletionTimestamp":$now,"dataChange":true}}""")
-      // a merge into an empty/no-match state with an empty cached would
-      // publish an empty commit — keep the version instead
+      // a merge into an empty/no-match state with an empty source would
+      // publish an empty commit — keep the version instead (and leave
+      // the write's counts unread: an empty plan may never report them)
       if (rewriteSet.isEmpty && !insertedAny) return DeltaDml(st.version, 0L, 0)
       // merged rows (updates applied, inserts included) must satisfy
       // the table's recorded obligations before anything publishes
       DeltaWriteGate.validateAddsOrAbort(spark, table, st, st.schema,
         st.partitionColumns, newAdds.toSeq, "MERGE", fs, root)
       // rowsAffected: clause-FIRED rows (matched + NMBS) plus fired
-      // inserts — both bounded by the rewrite surface
-      val firedCount =
-        if (rewriteSet.isEmpty) 0L else applied.firedOld.count()
-      val insertCount =
-        if (notMatched.isEmpty) 0L else applied.inserts.count()
+      // inserts, as the data write counted them
+      val counts = ap.counts()
       if (cdfOn) {
-        val cdcRows0 = applied.updatedPre
+        val cdcRows0 = ap.updatedPre
             .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied.updatedPost
+          .unionByName(ap.updatedPost
             .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(applied.deletedOld
+          .unionByName(ap.deletedOld
             .withColumn("_change_type", lit("delete")))
-          .unionByName(applied.inserts
-            .select(st.schema.fields.toIndexedSeq
-              .map(f => col(s"`${f.name}`")): _*)
+          .unionByName(ap.inserts
             .withColumn("_change_type", lit("insert")))
         val cdcRows =
           if (mapped) toPhysical(cdcRows0, st.schema, Seq("_change_type"))
           else cdcRows0
         lines ++= stageCdcFiles(cdcRows, root, fs, partitionDirs)
       }
+      // delta-spark's MERGE metric names, values as strings
+      val metrics = Seq(
+        "numSourceRows" -> summary.rows,
+        "numTargetRowsInserted" -> counts.inserted,
+        "numTargetRowsUpdated" -> counts.updated,
+        "numTargetRowsDeleted" -> counts.deleted,
+        "numTargetRowsCopied" -> counts.copied,
+        "numTargetFilesAdded" -> newAdds.size.toLong,
+        "numTargetFilesRemoved" -> rewriteSet.size.toLong)
+      val commitInfo = s"""{"commitInfo":{"timestamp":$now,"operation":${
+        jstr("MERGE")},"operationParameters":{},"operationMetrics":${
+        metrics.map { case (k, n) => s"${jstr(k)}:${jstr(n.toString)}" }
+          .mkString("{", ",", "}")},"engineInfo":${jstr("graft")}}}"""
       val v = publishCommit(fs, new Path(root, "_delta_log"),
-        st.version + 1, lines.toSeq, st.configuration)
-      DeltaDml(v, firedCount + insertCount, rewriteSet.length)
-    } finally { cached.unpersist(): Unit }
+        st.version + 1, commitInfo +: lines.toSeq, st.configuration)
+      DeltaDml(v, counts.fired + counts.inserted, rewriteSet.length)
+    } finally stmt.release()
   }
 
 

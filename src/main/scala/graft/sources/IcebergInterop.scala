@@ -181,7 +181,9 @@ object IcebergInterop {
                                records: Long = 0L)
 
   /** `posDeletes` are v2 POSITION-DELETE parquet files (rows of
-    * `(file_path, pos)`) the read must kill per file; `dvDeletes` are
+    * `(file_path, pos)`) the read must kill per file, and
+    * `posDeleteRefs` maps those that reference exactly one data file to
+    * its path; `dvDeletes` are
     * v3 deletion vectors (Puffin blobs, one per referenced data
     * file); `eqDeletes` are value-keyed and sequence-ordered. `table`
     * is the path the state was resolved from (what read plans name). */
@@ -196,6 +198,7 @@ object IcebergInterop {
                             dvDeletes: Seq[IceDvDelete] = Nil,
                             defaultSortOrderId: Int = 0,
                             sortFields: Seq[IceSortField] = Nil,
+                            posDeleteRefs: Map[String, String] = Map.empty,
                             table: String)
 
   private def hadoopFs(spark: SparkSession, p: Path): FileSystem =
@@ -862,24 +865,35 @@ object IcebergInterop {
       val posApplied =
         if (st.posDeletes.isEmpty && st.dvDeletes.isEmpty) keyed
         else {
-          // v2 position-delete parquet shares one I-token across the
-          // snapshot (the per-file probe is a map lookup); a v3
+          // v2 position-delete parquet that references one data file
+          // is that file's own I-token (its first probe decodes only
+          // its own delete files); delete files referencing several
+          // data files share one I-token across the snapshot; a v3
           // deletion vector is its referenced file's own P-token —
-          // both compose per file via the Multi separator
-          val posToken =
-            if (st.posDeletes.isEmpty) None
-            else Some(ForeignDv.icebergToken(st.posDeletes))
+          // all compose per file via the Multi separator
+          val (scoped, shared) =
+            st.posDeletes.partition(st.posDeleteRefs.contains)
+          val sharedToken =
+            if (shared.isEmpty) None
+            else Some(ForeignDv.icebergToken(shared))
+          val scopedByFile: Map[String, String] =
+            scoped.groupBy(st.posDeleteRefs).toSeq.flatMap {
+              case (data, dels) =>
+                val tok = ForeignDv.icebergToken(dels)
+                fpForms(data).map(_ -> tok)
+            }.toMap
           val dvByFile: Map[String, String] =
             st.dvDeletes.flatMap(d => fpForms(d.referenced).map(_ ->
               ForeignDv.puffinToken(d.path, d.offset, d.size))).toMap
           val refs: Map[String, String] =
             st.files.flatMap { f =>
               fpForms(f.path).flatMap { k =>
-                val toks = posToken.toSeq ++ dvByFile.get(k).toSeq
-                // single-token values reuse the ONE instance (the
-                // common all-pos-deletes case): Java serialization
-                // back-references it, so the broadcast costs O(files
-                // + delete paths), not O(files × delete paths)
+                val toks = scopedByFile.get(k).toSeq ++ sharedToken.toSeq ++
+                  dvByFile.get(k).toSeq
+                // single-token values reuse one instance per token:
+                // Java serialization back-references it, so the
+                // broadcast costs O(files + delete paths), not
+                // O(files × delete paths)
                 if (toks.isEmpty) None
                 else if (toks.size == 1) Some(k -> toks.head)
                 else Some(k -> toks.mkString(ForeignDv.Multi))
@@ -1097,6 +1111,7 @@ object IcebergInterop {
     }
     val files = Seq.newBuilder[IceFile]
     val posDeletes = Seq.newBuilder[String]
+    val posDeleteRefs = Map.newBuilder[String, String]
     val eqDeletes = Seq.newBuilder[EqDelete]
     val dvDeletes = Seq.newBuilder[IceDvDelete]
     // v3 manifest-level first_row_id inheritance (r16, the spec's
@@ -1256,7 +1271,22 @@ object IcebergInterop {
                 records = Option(df.get("record_count"))
                   .map(_.asInstanceOf[Number].longValue).getOrElse(0L))
             case 1 => // position deletes: (file_path, pos) rows
-              posDeletes += df.get("file_path").toString
+              val path = df.get("file_path").toString
+              posDeletes += path
+              // file-scoped: the entry names its one data file, or its
+              // file_path column's lower and upper bounds are equal
+              fieldOpt(df, "referenced_data_file").map(_.toString)
+                .orElse {
+                  def bound(f: String) = entryBounds(df, f,
+                    Map(PosFilePathFieldId -> "file_path"),
+                    StructType(Seq(StructField("file_path", StringType))))
+                    .get("file_path")
+                  (bound("lower_bounds"), bound("upper_bounds")) match {
+                    case (Some(Right(lo)), Some(Right(hi))) if lo == hi =>
+                      Some(lo)
+                    case _ => None
+                  }
+                }.foreach(r => posDeleteRefs += path -> r)
             case 2 => // equality deletes: value rows + field-id key set
               val ids = fieldOpt(df, "equality_ids") match {
                 case Some(xs: java.util.Collection[_]) =>
@@ -1337,7 +1367,7 @@ object IcebergInterop {
         schemaFieldTriples, snapshotSchemaIds,
         initialDefaults, writeDefaults),
       formatVersion.toInt, dvDeletes.result(),
-      defaultSortId, sortFields, table)
+      defaultSortId, sortFields, posDeleteRefs.result(), table)
   }
 
   /** An entry's `lower_bounds`/`upper_bounds` map decoded to the
@@ -1976,7 +2006,8 @@ object IcebergInterop {
       partFields: Seq[(SpecField, String, Int)],
       v2: Boolean = false,
       dv: Boolean = false,
-      lineage: Boolean = false): org.apache.avro.Schema = {
+      lineage: Boolean = false,
+      referenced: Boolean = false): org.apache.avro.Schema = {
     val partJson = partFields.map { case (sf, avroType, fid) =>
       s"""{"name":${jstr(sf.name)},"type":["null","$avroType"],""" +
         s""""default":null,"field-id":$fid}"""
@@ -2003,12 +2034,15 @@ object IcebergInterop {
     val equalityIdsField =
       if (!v2) ""
       else """,{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null,"field-id":135}"""
-    // v3 deletion-vector addressing (spec data_file fields 143-145):
-    // which data file the blob kills and its byte range in the Puffin
+    // deletion-vector addressing (spec data_file fields 143-145):
+    // which data file the blob kills and its byte range in the Puffin;
+    // a file-scoped position-delete entry carries field 143 alone
+    val referencedField =
+      if (!dv && !referenced) ""
+      else """,{"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143}"""
     val dvFields =
       if (!dv) ""
-      else """,{"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143},""" +
-        """{"name":"content_offset","type":["null","long"],"default":null,"field-id":144},""" +
+      else """,{"name":"content_offset","type":["null","long"],"default":null,"field-id":144},""" +
         """{"name":"content_size_in_bytes","type":["null","long"],"default":null,"field-id":145}"""
     // v3 row lineage (spec data_file field 142): the file's explicit
     // row-id origin — stamped on every v3 data file this writer adds,
@@ -2032,6 +2066,7 @@ object IcebergInterop {
          |  ${boundsField("lower_bounds", 125, 126, 127)},
          |  ${boundsField("upper_bounds", 128, 129, 130)}
          |  $equalityIdsField
+         |  $referencedField
          |  $dvFields
          |  $lineageField
          |]},"field-id":2}
@@ -3989,12 +4024,21 @@ object IcebergInterop {
     * `fullTableMerge = true`, OR a target provably small under
     * [[ManifestLake.NmbsSmallTableBytesConf]].
     *
-    * Scale shape: one key-column scan (column-pruned) finds
-    * key-matched files and the insert anti-join rides it; the NMBS
-    * scope prunes candidates on recorded bounds before one anti-join
-    * scan finds clause-fired files; ONLY files holding a fired row
-    * rewrite; untouched manifests carry verbatim through
-    * [[publishRewrite]]. AQE broadcasts a small source. */
+    * Scale shape ([[MergeClauses]]' three passes over the persisted
+    * source): one job over the source keys gives the duplicate-key
+    * verdict; one key-column scan (column-pruned) semi-joined with
+    * the source keys finds the key-matched files and keeps the
+    * matched keys; one left join of the rewritten files' rows with
+    * the source, unioned with the inserts (the source rows anti-joined
+    * with the kept matched keys), is the data write, whose
+    * `Observation` counts the rows. The NMBS scope prunes candidates
+    * on recorded bounds before one anti-join scan finds clause-fired
+    * files; ONLY files holding a fired row rewrite; untouched
+    * manifests carry verbatim through [[publishRewrite]], and the
+    * snapshot summary records the added and deleted files and
+    * records. AQE broadcasts a small source. On a 20,000-row, 4-file
+    * table and a 200-row change batch that is 6 Spark jobs
+    * (`MergeJobsSpec`). */
   def mergeApply(source: DataFrame, table: String, keyCols: Seq[String],
                  matched: Seq[ManifestLake.MergeMatched],
                  notMatched: Seq[ManifestLake.MergeInsert] = Nil,
@@ -4012,9 +4056,10 @@ object IcebergInterop {
     * point (merge() checks schema compatibility against the SAME
     * state it merges). The source is persisted for the statement:
     * its plan feeds the key-uniqueness guard, the touched-file
-    * scans and the staging job, and a nondeterministic source
+    * scans and the rewrite join, and a nondeterministic source
     * re-executed per job could commit rows that disagree with its
-    * own counts (the lake's mergeApply discipline). */
+    * own counts (the lake's mergeApply discipline). A MERGE that
+    * stages nothing and rewrites nothing publishes no snapshot. */
   private def mergeApplyResolved(st: IceState, source: DataFrame,
       table: String, keyCols: Seq[String],
       matched: Seq[ManifestLake.MergeMatched],
@@ -4022,7 +4067,7 @@ object IcebergInterop {
       notMatchedBySource: Seq[ManifestLake.MergeMatched],
       scope: Option[org.apache.spark.sql.Column],
       fullTableMerge: Boolean): IceDml = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val spark = source.sparkSession
     MergeClauses.requireValid(keyCols, matched, notMatched,
       notMatchedBySource)
@@ -4037,12 +4082,9 @@ object IcebergInterop {
     keyCols.foreach(k => require(st.schema.exists(_.name == k),
       s"MERGE key column $k is not in the schema of $table"))
     import spark.implicits._
-    val cached = source.select(source.columns.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stmt = new MergeClauses.Statement(source)
     try {
-      val dup = cached.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1)
-      require(dup.isEmpty,
+      require(MergeClauses.summarize(stmt, keyCols).duplicate.isEmpty,
         s"MERGE source has duplicate key rows on " +
           s"(${keyCols.mkString(", ")}) — which one updates the target " +
           "is undefined; deduplicate the source first")
@@ -4059,15 +4101,18 @@ object IcebergInterop {
             "true. Tables whose recorded size fits " +
             s"${ManifestLake.NmbsSmallTableBytesConf} run whole-table " +
             "automatically.")
-      val srcKeys = cached.select(keyCols.map(col): _*).distinct()
-      // skipped when no clause can fire on a matched row — an NMBS-only
-      // sync never rewrites key-matched files
-      def liveKeys = toDF(spark, st, keepLineage = true)
-        .select((keyCols.map(col) :+ col("__fp")).toIndexedSeq: _*)
+      // one key-column scan: the files holding a key match and the
+      // matched keys the insert anti-join reads (skipped when no clause
+      // can use them — an NMBS-only sync never rewrites key-matched
+      // files)
+      val pr =
+        if (matched.isEmpty && notMatched.isEmpty)
+          MergeClauses.noProbe(stmt, keyCols)
+        else MergeClauses.probe(stmt, toDF(spark, st, keepLineage = true)
+          .select((keyCols.map(col) :+ col("__fp")).toIndexedSeq: _*),
+          "__fp", keyCols)
       val touchedNames: Set[String] =
-        if (matched.isEmpty) Set.empty
-        else liveKeys.join(srcKeys, keyCols).select(col("__fp")).distinct()
-          .as[String].collect().toSet
+        if (matched.isEmpty) Set.empty else pr.files
       val touched = st.files.filter(f =>
         ForeignDv.forms(f.path).exists(touchedNames))
       // NMBS-fired files: bound-pruned candidates, one anti-join scan
@@ -4090,7 +4135,8 @@ object IcebergInterop {
               .getOrElse(lit(true))
             val hit = toDF(spark, st.copy(files = cands.toIndexedSeq),
               keepLineage = true)
-              .join(srcKeys, keyCols, "left_anti")
+              .join(stmt.cached.select(keyCols.map(col): _*).distinct(),
+                keyCols, "left_anti")
               .where(rowScope)
               .withColumn("__nact",
                 MergeClauses.actionIndex(notMatchedBySource))
@@ -4128,29 +4174,28 @@ object IcebergInterop {
               s"metadata/v${st.metadataVersion}.metadata.json")))
           (jLong(meta \ "last-sequence-number") max 0L) + 1L
         }
-      val notMatchedSrc =
-        if (notMatched.isEmpty) cached.filter(lit(false))
-        else cached.join(liveKeys.drop("__fp").distinct(), keyCols,
-          "left_anti")
-      val applied = MergeClauses(currentRows, cached, keyCols, st.schema,
+      val applied = MergeClauses(currentRows, stmt, keyCols, st.schema,
         matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
-        notMatchedSrc,
+        pr.matchedKeys, keep = false,
         extraCarry = lineageFields,
         stampUpdated =
           if (!v3) Map.empty
           else Map(LastUpdatedCol -> lit(newSeq)))
-      val insertCount =
-        if (notMatched.isEmpty) 0L else applied.inserts.count()
-      if (rewriteSet.isEmpty && insertCount == 0L)
+      val added = stageRewritten(spark, fs, root, st, applied.written)
+      // nothing staged and nothing to remove: no snapshot (and the
+      // write's counts stay unread — an empty plan may never report)
+      if (rewriteSet.isEmpty && added.isEmpty)
         return IceDml(st.snapshotId, 0L, 0)
-      val firedCount =
-        if (rewriteSet.isEmpty) 0L else applied.firedOld.count()
-      val added = stageRewritten(spark, fs, root, st,
-        applied.survivors.unionByName(applied.inserts))
+      val counts = applied.counts()
       val snap = publishRewrite(spark, fs, root, st, added,
-        rewriteSet.map(_.path).toSet, "overwrite", lineageSafe = true)
-      IceDml(snap, firedCount + insertCount, rewriteSet.size)
-    } finally { cached.unpersist(): Unit }
+        rewriteSet.map(_.path).toSet, "overwrite", lineageSafe = true,
+        summary = Map(
+          "added-data-files" -> added.size.toString,
+          "deleted-data-files" -> rewriteSet.size.toString,
+          "added-records" -> added.map(_.records).sum.toString,
+          "deleted-records" -> rewriteSet.map(_.records).sum.toString))
+      IceDml(snap, counts.fired + counts.inserted, rewriteSet.size)
+    } finally stmt.release()
   }
 
 
@@ -4885,21 +4930,27 @@ object IcebergInterop {
     val (partFields, specJson) = morPartFields(priorMeta, st)
     val entrySchema = manifestEntrySchema(partFields, v2 = true,
       lineage = v3)
+    // position-delete entries name their data file when they have one
+    val posDeletes = eqIds.isEmpty
+    val delSchema =
+      if (!posDeletes) entrySchema
+      else manifestEntrySchema(partFields, v2 = true, lineage = v3,
+        referenced = true)
     val listEntries =
       scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
     val manifestPath = new Path(metaDir, s"$uuid-m0.avro")
     if (delFiles.nonEmpty) {
-    writeAvro(fs, manifestPath, entrySchema,
+    writeAvro(fs, manifestPath, delSchema,
       Map("format-version" -> "2", "content" -> "deletes",
         "partition-spec" -> specJson,
         "partition-spec-id" -> st.defaultSpecId.toString,
         "schema" -> schemaJsonStr),
       delFiles.map { case (path, rows, bytes) =>
-        val e = new GenericData.Record(entrySchema)
+        val e = new GenericData.Record(delSchema)
         e.put("status", 1)
         e.put("snapshot_id", snapshotId)
         val dfRec = new GenericData.Record(
-          entrySchema.getField("data_file").schema())
+          delSchema.getField("data_file").schema())
         // content 1 = position deletes, 2 = equality deletes (which
         // also record the key columns' field ids)
         dfRec.put("content", if (eqIds.nonEmpty) 2 else 1)
@@ -4910,7 +4961,10 @@ object IcebergInterop {
         }
         dfRec.put("file_path", path)
         dfRec.put("file_format", "PARQUET")
-        putPartition(entrySchema, dfRec, partFields,
+        if (posDeletes)
+          referencedDataFile(spark, new Path(path))
+            .foreach(dfRec.put("referenced_data_file", _))
+        putPartition(delSchema, dfRec, partFields,
           delPartitions.getOrElse(path, Map.empty))
         dfRec.put("record_count", rows)
         dfRec.put("file_size_in_bytes", bytes)
@@ -5457,7 +5511,8 @@ object IcebergInterop {
       root: Path, st: IceState, added: Seq[IceFile],
       removedPaths: Set[String], operation: String,
       lineageSafe: Boolean = false,
-      regroup: Boolean = false): Long = {
+      regroup: Boolean = false,
+      summary: Map[String, String] = Map.empty): Long = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     def compactJ(v: JValue): String =
@@ -5752,7 +5807,7 @@ object IcebergInterop {
     // row-id range and next-row-id moves past it)
     publishDmlDoc(fs, root, priorMeta, st.metadataVersion, snapshotId,
       listPath, operation, curSchemaId,
-      if (v2) Some(newSeq) else None,
+      if (v2) Some(newSeq) else None, summary,
       rowLineage =
         if (v3) Some((priorNextRowId, added.map(_.records).sum))
         else None)
@@ -6266,6 +6321,32 @@ object IcebergInterop {
       val withIds = fields.flatMap(f => Option(f.getId)
         .map(id => id.intValue.toLong -> f.getName))
       if (withIds.isEmpty) None else Some(withIds.toMap)
+    } finally reader.close()
+  }
+
+  /** The position-delete `file_path` column's field id (spec-reserved). */
+  private val PosFilePathFieldId = 2147483546L
+
+  /** The one data file a position-delete parquet file references: its
+    * `file_path` column's footer statistics, when every row group's
+    * min and max are that same path. None when they differ or the
+    * footer records none. */
+  private def referencedDataFile(spark: SparkSession, p: Path)
+      : Option[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    try {
+      val stats = reader.getFooter.getBlocks.asScala.toSeq.map(
+        _.getColumns.asScala.find(_.getPath.toDotString == "file_path")
+          .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue))
+      if (stats.isEmpty || stats.exists(_.isEmpty)) None
+      else stats.flatten.flatMap(s => Seq(s.genericGetMin, s.genericGetMax))
+        .collect { case b: org.apache.parquet.io.api.Binary =>
+          b.toStringUsingUTF8 }.distinct match {
+          case Seq(one) => Some(one)
+          case _ => None
+        }
     } finally reader.close()
   }
 

@@ -2279,34 +2279,42 @@ object ManifestLake {
     } finally { updatesCached.unpersist(); () }
   }
 
-  /** Manifest-stats candidate pruning for a keyed rewrite: one tiny agg
-    * over the update set bounds each stats-covered key column, and files
-    * whose recorded range (numeric OR truncated-string) misses the bound
-    * are untouched by definition. Shared by [[merge]] and
-    * [[mergeApply]]. */
-  private def mergeCandidates(snap: Snapshot, updates: DataFrame,
-                              keyCols: Seq[String]): Seq[FileEntry] = {
-    import org.apache.spark.sql.functions.col
+  /** Manifest-stats candidate pruning for a keyed rewrite: each
+    * stats-covered key column's `[min, max]` over the update set
+    * (`bound`, rendered as `min(c).cast("string")` renders it; None when
+    * every key is null) bounds the key space, and files whose recorded
+    * range (numeric OR truncated-string) misses the bound are untouched
+    * by definition. Shared by [[merge]] and [[mergeApply]]. */
+  private def mergeCandidates(snap: Snapshot, keyCols: Seq[String],
+      bound: String => Option[(String, String)]): Seq[FileEntry] = {
     val statKeys = keyCols.filter(k => snap.entries.exists(e =>
       e.range(k).nonEmpty || e.strRange(k).nonEmpty))
     statKeys.foldLeft(snap.entries) { (entries, k) =>
-      val Array(lo, hi) = updates
-        .agg(org.apache.spark.sql.functions.min(col(k)).cast("string"),
-          org.apache.spark.sql.functions.max(col(k)).cast("string"))
-        .collect().head.toSeq.toArray
-      if (lo == null) Seq.empty // no non-null update keys: nothing matches
-      else scala.util.Try((BigDecimal(lo.toString), BigDecimal(hi.toString)))
-        .toOption match {
-        // non-numeric rendering: a STRING key column prunes on its
-        // truncated string stats (cast-to-string is the identity for a
-        // string column; other non-numeric types simply recorded no
-        // string range and prune nothing)
-        case None => strPrune(entries, k, lo.toString, hi.toString)
-        case Some((bLo, bHi)) =>
-          rangeCandidates(Snapshot(snap.version, entries, None, None), k,
-            bLo, bHi)
+      bound(k) match {
+        case None => Seq.empty // no non-null update keys: nothing matches
+        case Some((lo, hi)) =>
+          scala.util.Try((BigDecimal(lo), BigDecimal(hi))).toOption match {
+            // non-numeric rendering: a STRING key column prunes on its
+            // truncated string stats (cast-to-string is the identity for
+            // a string column; other non-numeric types simply recorded
+            // no string range and prune nothing)
+            case None => strPrune(entries, k, lo, hi)
+            case Some((bLo, bHi)) =>
+              rangeCandidates(Snapshot(snap.version, entries, None, None),
+                k, bLo, bHi)
+          }
       }
     }
+  }
+
+  /** `[min, max]` of `updates`' column `k` as strings — one tiny agg. */
+  private def keyBound(updates: DataFrame, k: String)
+      : Option[(String, String)] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val Array(lo, hi) = updates
+      .agg(min(col(k)).cast("string"), max(col(k)).cast("string"))
+      .collect().head.toSeq.toArray
+    Option(lo).map(l => (l.toString, hi.toString))
   }
 
   private def mergeCommitted(updates: DataFrame, table: String,
@@ -2318,7 +2326,7 @@ object ManifestLake {
     import org.apache.spark.sql.functions.col
     val snap = snapshot(spark, table, prev)
     // (1) manifest-stats candidate pruning on any range-covered key column
-    val candidates = mergeCandidates(snap, updates, keyCols)
+    val candidates = mergeCandidates(snap, keyCols, keyBound(updates, _))
     // (2) touched-file detection: key-columns-only scan of the candidates
     val updKeys = updates.select(keyCols.map(col): _*)
     // provenance scan: DV-filtered, so a key whose only occurrences are
@@ -2405,7 +2413,7 @@ object ManifestLake {
       readPaths = candidates.map(_.path).toSet,
       wouldRead = newEntries => mergeCandidates(
         Snapshot(snap.version, newEntries, schema = Some(baseSchema)),
-        updates, keyCols),
+        keyCols, keyBound(updates, _)),
       stagedAdds0 = moved, annotatedAdds0 = Nil,
       removes = touched.map(_.path), changeFiles0 = changeFiles,
       schema = Some(mergedSchema))
@@ -2480,7 +2488,17 @@ object ManifestLake {
     * verbatim. Content-idempotent whenever the clauses are (conditions
     * and values over SOURCE columns re-apply to the same state).
     * `recordChangeFeed` stages delete/insert CDC images of exactly the
-    * rows a clause touched.
+    * rows a clause touched. A MERGE that matches no file, inserts
+    * nothing and tombstones nothing commits nothing and returns the
+    * current version.
+    *
+    * Cost: [[MergeClauses]]' three passes over the persisted source —
+    * one job over its keys (duplicate verdict and the key bounds the
+    * candidates prune by), one probe of the candidates' key columns
+    * (the touched files and their matched keys), and one rewrite join
+    * whose computed rows feed the data write and the change-feed
+    * write. On a 20,000-row, 4-file table and a 200-row change batch
+    * that is 7 Spark jobs (`MergeJobsSpec`).
     *
     * `WHEN NOT MATCHED BY SOURCE` — the full-sync CDC idiom (mirror a
     * source, deleting/altering target rows the source no longer has) —
@@ -2562,106 +2580,42 @@ object ManifestLake {
     def srcHas(n: String) = srcNames.exists(_.equalsIgnoreCase(n))
     keyCols.foreach(k => require(srcHas(k),
       s"mergeApply source lacks key column '$k'"))
-    val cached = source.select(source.columns.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stmt = new MergeClauses.Statement(source)
     try {
-      val dup = cached.groupBy(keyCols.map(col): _*)
-        .count().filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
+      // one job over the source keys: the duplicate verdict and the key
+      // bounds candidate pruning reads
+      val summary = MergeClauses.summarize(stmt, keyCols)
+      require(summary.duplicate.isEmpty,
         s"mergeApply source contains duplicate keys (e.g. " +
-          s"${dup.headOption.fold("")(_.toSeq.init.mkString("[", ", ", "]"))})" +
+          s"${summary.duplicate.fold("")(_.mkString("[", ", ", "]"))})" +
           " — SQL MERGE raises when multiple source rows match one " +
           "target row. De-duplicate the source first.")
-      val candidates = mergeCandidates(snap, cached, keyCols)
-      val srcKeys = cached.select(keyCols.map(col): _*).distinct()
-      val touchedNames =
-        if (candidates.isEmpty) Set.empty[String]
-        else provenanceScan(spark, table, snap, candidates)
-          .select((keyCols.map(col) :+ col("__g_file")): _*)
-          .join(srcKeys, keyCols, "left_semi")
-          .select("__g_file").distinct()
-          .collect().map(_.getString(0)).toSet
+      val candidates = mergeCandidates(snap, keyCols, summary.bounds)
+      // provenance scan: DV-filtered, so a key whose only occurrences
+      // are deletion-vectored does not drag its file into the rewrite
+      val pr =
+        if (candidates.isEmpty) MergeClauses.noProbe(stmt, keyCols)
+        else MergeClauses.probe(stmt,
+          provenanceScan(spark, table, snap, candidates)
+            .select((keyCols.map(col) :+ col("__g_file")): _*),
+          "__g_file", keyCols)
+      val touchedNames = pr.files
       val touched = candidates.filter(e =>
         touchedNames(e.path.split('/').last))
-      val presentCol = MergeSrcPrefix + "__present"
-      val srcP = cached.select(
-        (srcNames.map(c => col(s"`$c`").as(MergeSrcPrefix + c)) :+
-          lit(1).as(presentCol)): _*)
       val currentRows =
         if (touched.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], baseSchema)
         else readSnapshotFiles(spark, table, snap, touched.map(_.path))
-      // the ON clause's target-only scope conjuncts ride the join, per
-      // SQL semantics: a key-equal row failing the scope is NOT matched
-      val joinCond = scope.foldLeft(keyCols.map(k =>
-        col(s"`$k`") === col(MergeSrcPrefix + k)).reduce(_ && _))(_ && _)
-      val joined = currentRows.join(srcP, joinCond, "left")
-      // first-fired matched clause (SQL order); -1 = carry unchanged.
-      // NULL conditions do not fire (TRUE-only gating) — the shared
-      // [[MergeClauses]] fold, one semantics for all three dialects.
-      val act = MergeClauses.actionIndex(matched)
-      // NMBS clauses fire on source-MATCHLESS rows inside the scope;
-      // rows of TOUCHED files apply them inline in this rewrite (free —
-      // the file is being rewritten anyway), indexed after the matched
-      // clauses in the shared __act space
-      val scopeP = scope.map(c => coalesce(c, lit(false)))
-        .getOrElse(lit(effectiveFullTable))
-      val nmbsAct = MergeClauses.actionIndex(notMatchedBySource,
-        matched.size)
-      val withAct = joined.withColumn("__act",
-        when(col(presentCol).isNotNull, act)
-          .otherwise(if (notMatchedBySource.isEmpty) lit(-1)
-          else when(scopeP, nmbsAct).otherwise(lit(-1))))
-      val rowClauses = matched ++ notMatchedBySource
-      val deleteIdxs = rowClauses.zipWithIndex.collect {
-        case (_: MergeDelete, i) => i }
-      val surviving =
-        if (deleteIdxs.isEmpty) withAct
-        else withAct.filter(!col("__act").isin(deleteIdxs: _*))
-      def updateValue(f: org.apache.spark.sql.types.StructField)
-          : org.apache.spark.sql.Column =
-        rowClauses.zipWithIndex.foldRight(col(s"`${f.name}`")) {
-          case ((u: MergeUpdate, i), rest) =>
-            val v = u.assignments match {
-              case None =>
-                if (srcHas(f.name)) mergeSrcCol(f.name) else col(s"`${f.name}`")
-              case Some(as) => as.find(_._1.equalsIgnoreCase(f.name))
-                .map(_._2).getOrElse(col(s"`${f.name}`"))
-            }
-            when(col("__act") === i, v.cast(f.dataType)).otherwise(rest)
-          case (_, rest) => rest
-        }.as(f.name)
-      val survivors = surviving.select(
-        baseSchema.fields.toSeq.map(updateValue): _*)
       // not-matched source rows: anti-join against the touched files'
-      // keys — complete, because stats-sound candidates contain every
-      // file that could hold a source key, and touched ⊆ candidates is
-      // exactly the subset that does
-      val tgtKeys = currentRows.select(keyCols.map(col): _*)
-      val notMatchedSrc = srcP.join(tgtKeys,
-        keyCols.map(k => col(MergeSrcPrefix + k) === tgtKeys(k))
-          .reduce(_ && _), "left_anti")
-      val iact = MergeClauses.actionIndexOf(notMatched.map(_.condition))
-      val firedIns = notMatchedSrc.withColumn("__iact", iact)
-        .filter(col("__iact") >= 0)
-      def insertValue(f: org.apache.spark.sql.types.StructField)
-          : org.apache.spark.sql.Column =
-        notMatched.zipWithIndex.foldRight(
-          lit(null).cast(f.dataType)) { case ((cl, i), rest) =>
-          val v = cl.assignments match {
-            case None =>
-              if (srcHas(f.name)) mergeSrcCol(f.name)
-              else lit(null).cast(f.dataType)
-            case Some(as) => as.find(_._1.equalsIgnoreCase(f.name))
-              .map(_._2).getOrElse(lit(null).cast(f.dataType))
-          }
-          when(col("__iact") === i, v.cast(f.dataType)).otherwise(rest)
-        }.as(f.name)
-      val inserts = firedIns.select(
-        baseSchema.fields.toSeq.map(insertValue): _*)
+      // matched keys — complete, because stats-sound candidates contain
+      // every file that could hold a source key, and touched ⊆
+      // candidates is exactly the subset that does
+      val ap = MergeClauses(currentRows, stmt, keyCols, baseSchema,
+        matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
+        pr.matchedKeys, keep = recordChangeFeed)
       val next = prev + 1
-      val moved = stageDataFiles(survivors.unionByName(inserts), fs, p,
+      val moved = stageDataFiles(ap.written, fs, p,
         next, partitionColsOf(snap), snapStatsCols(snap))
       validateStagedChecks(spark, fs, p, moved, snap.checks, table, "merge")
       // NMBS over files NOT already being rewritten: tombstone
@@ -2688,7 +2642,8 @@ object ManifestLake {
               .getOrElse(lit(true))
             val firedRows = graft.core.TransientCache.persist(
               provenanceScan(spark, table, snap, scopeCand)
-                .join(srcKeys, keyCols.toSeq, "left_anti")
+                .join(stmt.cached.select(keyCols.map(col): _*).distinct(),
+                  keyCols.toSeq, "left_anti")
                 .where(rowScope)
                 .withColumn("__nact", nact0)
                 .filter(col("__nact") >= 0))
@@ -2743,18 +2698,19 @@ object ManifestLake {
             }
           }
         }
+      // no matched file, no insert and no NMBS tombstone: nothing to
+      // commit, the version stays (as a no-match delete's does)
+      if (touched.isEmpty && moved.isEmpty && nmbsVectored.isEmpty &&
+          nmbsMoved.isEmpty) return prev
       val changeFiles =
         if (!recordChangeFeed) Nil
         else {
           // exactly the rows a clause touched: old images of updated +
           // deleted rows, new images of updated results + inserts
-          val oldImages = withAct.filter(col("__act") >= 0)
-            .select(baseSchema.fields.toSeq.map(f => col(s"`${f.name}`")): _*)
-          val newImages = surviving.filter(col("__act") >= 0)
-            .select(baseSchema.fields.toSeq.map(updateValue): _*)
-          val cowCdc = oldImages.withColumn("_change_type", lit("delete"))
-            .unionByName(newImages.withColumn("_change_type", lit("insert")))
-            .unionByName(inserts.withColumn("_change_type", lit("insert")))
+          val cowCdc = ap.firedOld.withColumn("_change_type", lit("delete"))
+            .unionByName(ap.updatedPost
+              .withColumn("_change_type", lit("insert")))
+            .unionByName(ap.inserts.withColumn("_change_type", lit("insert")))
           stageChangeFiles(nmbsCdc.fold(cowCdc)(cowCdc.unionByName(_)),
             fs, p, next)
         }
@@ -2770,7 +2726,7 @@ object ManifestLake {
         wouldRead = { newEntries =>
           val synth = Snapshot(snap.version, newEntries,
             schema = snap.schema.orElse(Some(baseSchema)))
-          val keyHits = mergeCandidates(synth, cached, keyCols)
+          val keyHits = mergeCandidates(synth, keyCols, summary.bounds)
           val nmbsHits =
             if (notMatchedBySource.isEmpty) Nil
             else if (scope.isEmpty) newEntries // unscoped sync reads all
@@ -2783,7 +2739,7 @@ object ManifestLake {
         removes = touched.map(_.path) ++ nmbsRemoves,
         changeFiles0 = changeFiles,
         schema = snap.schema.orElse(Some(baseSchema)))
-    } finally { cached.unpersist(); () }
+    } finally stmt.release()
   }
 
   /** The Hive partition columns of a snapshot's layout, in path order —

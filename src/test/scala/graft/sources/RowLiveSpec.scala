@@ -121,4 +121,31 @@ class RowLiveSpec extends AnyFunSuite with Matchers with SparkSpec {
     ManifestLake.read(spark, t)
       .filter(col("id").isin(50L, 150L, 160L)).count() shouldBe 0L
   }
+
+  test("Iceberg position deletes: each data file's token names only its " +
+    "own delete files") {
+    import spark.implicits._
+    val it = fresh()
+    IcebergInterop.write(ids(4000), it)
+    IcebergInterop.upgradeFormat(spark, it)
+    IcebergInterop.deleteMor(spark, it, col("id") % 5 === 0)
+    IcebergInterop.deleteMor(spark, it, col("id") % 7 === 0)
+    val st = IcebergInterop.state(spark, it, None)
+    st.files.size shouldBe 4
+    st.posDeletes.size shouldBe 8
+    // every delete file the writer staged references one data file
+    st.posDeleteRefs.keySet shouldBe st.posDeletes.toSet
+    val read = IcebergInterop.read(spark, it)
+    val refs = read.queryExecution.analyzed.flatMap(_.expressions.flatMap(
+      _.collect { case r: RowLive => r.env.value._1 })).head
+    st.files.foreach { f =>
+      val tok = ForeignDv.forms(f.path).flatMap(refs.get).head
+      val named = tok.split(ForeignDv.Sep).drop(1).toSet
+      named.size shouldBe 2
+      named.foreach(d => st.posDeleteRefs(d) shouldBe f.path)
+    }
+    val want = (1L to 4000L).filter(i => i % 5 != 0 && i % 7 != 0)
+    read.select("id").as[Long].collect().sorted.toSeq shouldBe want
+    read.filter(col("id") < 100L).count() shouldBe want.count(_ < 100L)
+  }
 }
