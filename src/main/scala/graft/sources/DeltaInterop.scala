@@ -2355,7 +2355,7 @@ object DeltaInterop {
     * matched keys; one left join of the rewritten files' rows with
     * the source, unioned with the inserts (the source rows anti-joined
     * with the kept matched keys), feeds the data write, the CDC write
-    * and the row counts (an `Observation` on the data write). The NMBS
+    * and the row counts (taken by the data write as it reads). The NMBS
     * scope prunes on recorded stats/partition values before one
     * anti-join scan finds clause-fired files; ONLY files holding a
     * fired row rewrite. AQE broadcasts a small source. On a 20,000-row,
@@ -2526,7 +2526,7 @@ object DeltaInterop {
         .get("delta.enableChangeDataFeed").contains("true")
       val ap = MergeClauses(currentRows, stmt, keyCols, st.schema,
         matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
-        pr.matchedKeys, keep = cdfOn,
+        pr, keep = cdfOn,
         extraCarry = rtFields,
         stampUpdated =
           if (!rowTracking) Map.empty
@@ -2600,8 +2600,7 @@ object DeltaInterop {
         lines += s"""{"remove":{"path":${jstr(urlEncode(a.path))},""" +
           s""""deletionTimestamp":$now,"dataChange":true}}""")
       // a merge into an empty/no-match state with an empty source would
-      // publish an empty commit — keep the version instead (and leave
-      // the write's counts unread: an empty plan may never report them)
+      // publish an empty commit — keep the version instead
       if (rewriteSet.isEmpty && !insertedAny) return DeltaDml(st.version, 0L, 0)
       // merged rows (updates applied, inserts included) must satisfy
       // the table's recorded obligations before anything publishes

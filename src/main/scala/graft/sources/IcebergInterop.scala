@@ -4030,8 +4030,8 @@ object IcebergInterop {
     * the source keys finds the key-matched files and keeps the
     * matched keys; one left join of the rewritten files' rows with
     * the source, unioned with the inserts (the source rows anti-joined
-    * with the kept matched keys), is the data write, whose
-    * `Observation` counts the rows. The NMBS scope prunes candidates
+    * with the kept matched keys), is the data write, which counts
+    * the rows as it reads them. The NMBS scope prunes candidates
     * on recorded bounds before one anti-join scan finds clause-fired
     * files; ONLY files holding a fired row rewrite; untouched
     * manifests carry verbatim through [[publishRewrite]], and the
@@ -4176,14 +4176,13 @@ object IcebergInterop {
         }
       val applied = MergeClauses(currentRows, stmt, keyCols, st.schema,
         matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
-        pr.matchedKeys, keep = false,
+        pr, keep = false,
         extraCarry = lineageFields,
         stampUpdated =
           if (!v3) Map.empty
           else Map(LastUpdatedCol -> lit(newSeq)))
       val added = stageRewritten(spark, fs, root, st, applied.written)
-      // nothing staged and nothing to remove: no snapshot (and the
-      // write's counts stay unread — an empty plan may never report)
+      // nothing staged and nothing to remove: no snapshot
       if (rewriteSet.isEmpty && added.isEmpty)
         return IceDml(st.snapshotId, 0L, 0)
       val counts = applied.counts()

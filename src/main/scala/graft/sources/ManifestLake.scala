@@ -2216,7 +2216,7 @@ object ManifestLake {
     * The scale contract is that IO is proportional to TOUCHED FILES, not
     * table size:
     *  1. candidate files are pre-pruned at the MANIFEST level when a key
-    *     column carries recorded ranges (one tiny agg over `updates`
+    *     column carries recorded ranges (one job over `updates`' keys
     *     bounds the key space; files whose range misses it are untouched
     *     by definition and never opened);
     *  2. candidates are scanned key-columns-only (column pruning) with
@@ -2230,9 +2230,10 @@ object ManifestLake {
     * row would be appended (the matched current row is removed once),
     * silently corrupting a primary-key table — the same situation where
     * Delta/Iceberg MERGE raises "multiple source rows matched". Checked
-    * here by default (one small aggregate over the cached update set);
-    * callers that have already de-duplicated (e.g. a compacted CDC
-    * batch) can skip the job with `checkUniqueKeys = false`.
+    * here by default, by the job that bounds the keys; callers that
+    * have already de-duplicated (e.g. a compacted CDC batch) can skip
+    * the check with `checkUniqueKeys = false` (and the job, when no key
+    * column has recorded ranges).
     *
     * Rows with a null key never match an equi-join: a null-keyed current
     * row is always retained, a null-keyed update row always inserts.
@@ -2244,39 +2245,36 @@ object ManifestLake {
             partitionBy: Seq[String] = Nil,
             checkUniqueKeys: Boolean = true,
             recordChangeFeed: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = updates.sparkSession
     requireCommitScheme(table, fsFor(spark, table)._1)
     val (fs, p) = fsFor(spark, table)
     val prev = currentVersion(spark, table)
-    // The update set feeds up to three jobs (key-bound agg, touched-file
-    // semi-join, survivor anti-join + staging union) — persist a PRIVATE
-    // projection for the merge's duration so an expensive upstream
-    // (a CDC read, a dedup) computes once. A fresh select() is persisted,
-    // never the caller's frame, so the finally-unpersist cannot drop a
-    // cache the caller owns.
-    val updatesCached = updates.select(updates.columns.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The update set feeds several jobs (key summary, touched-file
+    // semi-join, survivor anti-join + staging union) — the statement
+    // persists a PRIVATE projection for the merge's duration so an
+    // expensive upstream (a CDC read, a dedup) computes once.
+    val stmt = new MergeClauses.Statement(updates)
     try {
-      if (checkUniqueKeys) {
-        val dup = updatesCached.groupBy(keyCols.map(col): _*)
-          .count().filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
+      // one job over the update keys, run when something reads it: the
+      // duplicate verdict and the key bounds candidate pruning reads
+      lazy val summary = MergeClauses.summarize(stmt, keyCols)
+      if (checkUniqueKeys)
+        require(summary.duplicate.isEmpty,
           s"merge updates contain duplicate keys (e.g. " +
-            s"${dup.head.toSeq.init.mkString("[", ", ", "]")}) — an upsert " +
+            s"${summary.duplicate.fold("")(_.mkString("[", ", ", "]"))})" +
+            " — an upsert " +
             "with duplicate source keys appends every duplicate and " +
             "corrupts the table. De-duplicate the update set (keep the " +
             "newest row per key) or pass checkUniqueKeys = false if " +
             "already compacted.")
-      }
       if (prev.isEmpty)
-        write(updatesCached, table, append = false, partitionBy = partitionBy,
+        write(stmt.cached, table, append = false, partitionBy = partitionBy,
           statsCol = statsCol)
       else
-        mergeCommitted(updatesCached, table, keyCols, statsCol, partitionBy,
-          spark, fs, p, prev, recordChangeFeed)
-    } finally { updatesCached.unpersist(); () }
+        mergeCommitted(stmt.cached, k => summary.bounds(k), table, keyCols,
+          statsCol, partitionBy, spark, fs, p, prev, recordChangeFeed)
+    } finally stmt.release()
   }
 
   /** Manifest-stats candidate pruning for a keyed rewrite: each
@@ -2307,17 +2305,11 @@ object ManifestLake {
     }
   }
 
-  /** `[min, max]` of `updates`' column `k` as strings — one tiny agg. */
-  private def keyBound(updates: DataFrame, k: String)
-      : Option[(String, String)] = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val Array(lo, hi) = updates
-      .agg(min(col(k)).cast("string"), max(col(k)).cast("string"))
-      .collect().head.toSeq.toArray
-    Option(lo).map(l => (l.toString, hi.toString))
-  }
-
-  private def mergeCommitted(updates: DataFrame, table: String,
+  /** [[merge]] into an existing table; `bound` is the key bounds of
+    * `updates` ([[MergeClauses.SourceSummary.bounds]]). */
+  private def mergeCommitted(updates: DataFrame,
+                             bound: String => Option[(String, String)],
+                             table: String,
                              keyCols: Seq[String], statsCol: Option[String],
                              partitionBy: Seq[String],
                              spark: SparkSession, fs: FileSystem, p: Path,
@@ -2326,7 +2318,7 @@ object ManifestLake {
     import org.apache.spark.sql.functions.col
     val snap = snapshot(spark, table, prev)
     // (1) manifest-stats candidate pruning on any range-covered key column
-    val candidates = mergeCandidates(snap, keyCols, keyBound(updates, _))
+    val candidates = mergeCandidates(snap, keyCols, bound)
     // (2) touched-file detection: key-columns-only scan of the candidates
     val updKeys = updates.select(keyCols.map(col): _*)
     // provenance scan: DV-filtered, so a key whose only occurrences are
@@ -2413,7 +2405,7 @@ object ManifestLake {
       readPaths = candidates.map(_.path).toSet,
       wouldRead = newEntries => mergeCandidates(
         Snapshot(snap.version, newEntries, schema = Some(baseSchema)),
-        keyCols, keyBound(updates, _)),
+        keyCols, bound),
       stagedAdds0 = moved, annotatedAdds0 = Nil,
       removes = touched.map(_.path), changeFiles0 = changeFiles,
       schema = Some(mergedSchema))
@@ -2613,7 +2605,7 @@ object ManifestLake {
       // candidates is exactly the subset that does
       val ap = MergeClauses(currentRows, stmt, keyCols, baseSchema,
         matched, notMatched, notMatchedBySource, scope, effectiveFullTable,
-        pr.matchedKeys, keep = recordChangeFeed)
+        pr, keep = recordChangeFeed)
       val next = prev + 1
       val moved = stageDataFiles(ap.written, fs, p,
         next, partitionColsOf(snap), snapStatsCols(snap))

@@ -1,14 +1,15 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit,
   when}
-import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
-import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType,
-  StructField, StructType}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import graft.sources.ManifestLake.{MergeDelete, MergeInsert, MergeMatched,
   MergeSrcPrefix, MergeUpdate}
@@ -33,8 +34,8 @@ import graft.sources.ManifestLake.{MergeDelete, MergeInsert, MergeMatched,
   *  3. [[apply]]: one left join of the rewritten files' rows with the
   *     source, unioned with the fired inserts (the source rows whose key
   *     no matched target key equals), computed once: its output feeds
-  *     the data write, the change-feed images and, through an
-  *     [[Observation]] on the data write, the row counts (two
+  *     the data write, the change-feed images and the row counts, which
+  *     the data write takes in accumulators as it reads the rows (two
   *     broadcasts, then one job per write).
   * On the `lake_cdc` shape (a 20,000-row table in 4 files, a 200-row
   * update/insert/delete batch) that is 7 jobs on the lake, 9 on Delta
@@ -68,36 +69,28 @@ private[sources] object MergeClauses {
   final case class SourceSummary(rows: Long, duplicate: Option[Seq[Any]],
       bounds: Map[String, Option[(String, String)]])
 
-  /** Pass 1: one job over the source's key columns — the keys reduce
-    * to their row counts, and each reduced partition reports its rows,
-    * a duplicated key and its key bounds. Keys group as `groupBy`
-    * groups them (NaN and -0.0 normalized, nulls equal). */
+  /** Pass 1: one job over the source's key columns. `groupBy` groups
+    * them (with its own float normalization and collation-aware
+    * equality), planned without adaptive execution so its shuffle and
+    * the summary are two stages of one job; each reduced partition
+    * reports its rows, a duplicated key and its key bounds. */
   def summarize(stmt: Statement, keyCols: Seq[String]): SourceSummary = {
-    val source = stmt.cached
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
     import org.apache.spark.sql.catalyst.util.TypeUtils
     import org.apache.spark.sql.types.StringType
-    val raw = source.select(keyCols.map(col): _*)
-    val keys = raw.select(raw.schema.fields.toIndexedSeq.map { f =>
-      val c = col(s"`${f.name}`")
-      f.dataType match {
-        case FloatType | DoubleType => ColumnBridge.column(
-          NormalizeNaNAndZero(ColumnBridge.expression(c))).as(f.name)
-        case _ => c
-      }
-    }: _*)
-    val types = keys.schema.fields.map(_.dataType)
-    val parts = PlanBridge.internalRows(keys)
-      .map(r => (r.copy(), 1L)).reduceByKey(_ + _)
-      .mapPartitions { it =>
+    val grouped = stmt.cached.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)))
+    val types = keyCols.indices.map(grouped.schema(_).dataType)
+    val ni = keyCols.size
+    val parts = PlanBridge.oneJobRows(grouped).mapPartitions { it =>
         val ords = types.map(TypeUtils.getInterpretedOrdering)
-        val lo = new Array[Any](types.length)
-        val hi = new Array[Any](types.length)
+        val lo = new Array[Any](ni)
+        val hi = new Array[Any](ni)
         var rows = 0L
         var dup: Option[InternalRow] = None
-        it.foreach { case (k, n) =>
+        it.foreach { k =>
+          val n = k.getLong(ni)
           rows += n
           if (n > 1 && dup.isEmpty) dup = Some(k.copy())
           types.indices.foreach { i =>
@@ -111,7 +104,7 @@ private[sources] object MergeClauses {
         Iterator((rows, dup, lo.toSeq, hi.toSeq))
       }.collect()
     val ords = types.map(TypeUtils.getInterpretedOrdering)
-    val zone = source.sparkSession.sessionState.conf.sessionLocalTimeZone
+    val zone = grouped.sparkSession.sessionState.conf.sessionLocalTimeZone
     def render(v: Any, i: Int): String =
       Cast(Literal(v, types(i)), StringType, Some(zone)).eval().toString
     def extreme(vs: Seq[Any], better: (Any, Any) => Boolean): Option[Any] =
@@ -128,28 +121,43 @@ private[sources] object MergeClauses {
 
   /** What [[probe]] finds: the files holding a target row whose key
     * equals a source key, and those rows' keys (kept for the
-    * statement). */
-  final case class Probe(files: Set[String], matchedKeys: DataFrame)
+    * statement) with the kept rows' size in bytes. */
+  final case class Probe(files: Set[String], matchedKeys: DataFrame,
+                         matchedBytes: Long)
 
   /** Pass 2: semi-join `targetKeys` (the live target rows' key columns
     * and `fileCol`, the file holding each) with the source keys. The
-    * matched rows are kept; one job over them collects their files. */
+    * matched rows are kept; one job over them collects their files and
+    * their size. */
   def probe(stmt: Statement, targetKeys: DataFrame, fileCol: String,
             keyCols: Seq[String]): Probe = {
     val hits = targetKeys.join(stmt.cached.select(keyCols.map(col): _*),
       keyCols, "left_semi")
     val rows = stmt.keep(PlanBridge.internalRows(hits))
     val fi = hits.schema.fieldIndex(fileCol)
-    Probe(rows.mapPartitions(it =>
-        it.map(_.getUTF8String(fi).toString).toSet.iterator).collect().toSet,
+    val rowBytes = hits.schema.defaultSize
+    val parts = rows.mapPartitions { it =>
+      val files = scala.collection.mutable.Set.empty[String]
+      var bytes = 0L
+      it.foreach { r =>
+        files += r.getUTF8String(fi).toString
+        bytes += (r match {
+          case u: UnsafeRow => u.getSizeInBytes
+          case _ => rowBytes
+        })
+      }
+      Iterator((files.toSet, bytes))
+    }.collect()
+    Probe(parts.flatMap(_._1).toSet,
       PlanBridge.fromInternalRows(hits.sparkSession, rows, hits.schema)
-        .select(keyCols.map(col): _*))
+        .select(keyCols.map(col): _*),
+      parts.map(_._2).sum)
   }
 
   /** The probe of a target with nothing to scan: no files, no keys. */
   def noProbe(stmt: Statement, keyCols: Seq[String]): Probe =
     Probe(Set.empty, stmt.cached.select(keyCols.map(col): _*)
-      .filter(lit(false)))
+      .filter(lit(false)), 0L)
 
   /** Row counts of the data write, by what happened to each row. */
   final case class Counts(updated: Long, deleted: Long, copied: Long,
@@ -172,13 +180,12 @@ private[sources] object MergeClauses {
   final class Applied private[MergeClauses] (val written: DataFrame,
       val inserts: DataFrame, val firedOld: DataFrame,
       val updatedPre: DataFrame, val updatedPost: DataFrame,
-      val deletedOld: DataFrame, observation: Observation) {
-    /** The counts `written`'s write observed. Blocks until that write
-      * reports, so call it only after the write ran. */
+      val deletedOld: DataFrame, tally: Seq[LongAccumulator]) {
+    /** The counts `written`'s write took as it read the rows: read them
+      * after that write returned (zero before it ran). */
     def counts(): Counts = {
-      val m = observation.get
-      def n(k: String): Long = m(k).asInstanceOf[Long]
-      Counts(n("updated"), n("deleted"), n("copied"), n("inserted"))
+      val Seq(updated, deleted, copied, inserted) = tally.map(_.sum)
+      Counts(updated, deleted, copied, inserted)
     }
   }
 
@@ -229,11 +236,12 @@ private[sources] object MergeClauses {
 
   /** Pass 3: compose the clause application and compute it once.
     * `currentRows` is the rewritten files' live rows (schema columns,
-    * plus `extraCarry`); `matchedKeys` holds the key of every live
-    * target row whose key equals a source key ([[Probe.matchedKeys]]):
-    * a source row whose key is not among them is NOT MATCHED. The join
-    * is on the key alone and `scope` decides whether a key-equal row is
-    * MATCHED (SQL ON semantics: a key-equal row failing the scope is
+    * plus `extraCarry`); `probe` holds the key of every live target
+    * row whose key equals a source key ([[Probe.matchedKeys]]):
+    * a source row whose key is not among them is NOT MATCHED (the
+    * insert anti-join broadcasts them when the probe measured them
+    * within the broadcast threshold). The join is on the key alone
+    * and `scope` decides whether a key-equal row is MATCHED (SQL ON semantics: a key-equal row failing the scope is
     * not); NMBS clauses fire on matchless rows inside the scope
     * (everywhere, when `effectiveFullTable`). The join and the fired
     * inserts run now as far as their broadcasts; their rows compute in
@@ -251,7 +259,7 @@ private[sources] object MergeClauses {
             matched: Seq[MergeMatched], notMatched: Seq[MergeInsert],
             notMatchedBySource: Seq[MergeMatched],
             scope: Option[Column], effectiveFullTable: Boolean,
-            matchedKeys: DataFrame, keep: Boolean,
+            probe: Probe, keep: Boolean,
             extraCarry: Seq[StructField] = Nil,
             stampUpdated: Map[String, Column] = Map.empty): Applied = {
     extraCarry.foreach(f => require(
@@ -281,14 +289,12 @@ private[sources] object MergeClauses {
         .otherwise(if (notMatchedBySource.isEmpty) lit(-1)
         else when(scopeP, actionIndex(notMatchedBySource, matched.size))
           .otherwise(lit(-1))))
-    // fired NOT MATCHED inserts: the source rows no matched key equals.
-    // The matched keys are at most the source's, so a source small
-    // enough to broadcast bounds them too.
+    // fired NOT MATCHED inserts: the source rows no matched key equals
     val firedIns = {
       val srcKeyNames = keyCols.map(MergeSrcPrefix + _)
-      val mk = matchedKeys.select(keyCols.map(k =>
+      val mk = probe.matchedKeys.select(keyCols.map(k =>
         col(s"`$k`").as(MergeSrcPrefix + k)): _*)
-      val small = PlanBridge.sizeInBytes(source) <=
+      val small = probe.matchedBytes <=
         spark.sessionState.conf.autoBroadcastJoinThreshold
       (if (notMatched.isEmpty) srcP.filter(lit(false))
        else srcP.join(if (small) broadcast(mk) else mk, srcKeyNames,
@@ -299,14 +305,33 @@ private[sources] object MergeClauses {
     val all = targetRows.withColumn("__iact", lit(null).cast(IntegerType))
       .unionByName(firedIns, allowMissingColumns = true)
     val computed = PlanBridge.internalRows(all)
-    val rows = PlanBridge.fromInternalRows(spark,
-      if (keep) stmt.keep(computed) else computed, all.schema)
+    val kept = if (keep) stmt.keep(computed) else computed
+    val rows = PlanBridge.fromInternalRows(spark, kept, all.schema)
     val isIns = col("__iact").isNotNull
     val rowClauses = matched ++ notMatchedBySource
     val deleteIdxs = rowClauses.zipWithIndex.collect {
       case (_: MergeDelete, i) => i }
     val updateIdxs = rowClauses.zipWithIndex.collect {
       case (_: MergeUpdate, i) => i }
+    // the data write counts the rows as it reads them: updated,
+    // deleted, copied, inserted
+    val tally = Seq.fill(4)(spark.sparkContext.longAccumulator)
+    val counted = {
+      val Seq(nUpd, nDel, nCopy, nIns) = tally
+      val (upd, del) = (updateIdxs.toSet, deleteIdxs.toSet)
+      val (act, iact) = (all.schema.fieldIndex("__act"),
+        all.schema.fieldIndex("__iact"))
+      kept.map { r =>
+        if (!r.isNullAt(iact)) nIns.add(1)
+        else {
+          val a = r.getInt(act)
+          if (upd(a)) nUpd.add(1)
+          else if (del(a)) nDel.add(1)
+          else if (a == -1) nCopy.add(1)
+        }
+        r
+      }
+    }
     def updateValue(f: StructField): Column =
       rowClauses.zipWithIndex.foldRight(col(s"`${f.name}`")) {
         case ((u: MergeUpdate, i), rest) =>
@@ -342,13 +367,7 @@ private[sources] object MergeClauses {
     val schemaCols = schema.fields.toIndexedSeq
     def isAct(idxs: Seq[Int]): Column =
       if (idxs.isEmpty) lit(false) else col("__act").isin(idxs: _*)
-    val observation = Observation()
-    val written = rows
-      .observe(observation,
-        count(when(!isIns && isAct(updateIdxs), lit(1))).as("updated"),
-        count(when(!isIns && isAct(deleteIdxs), lit(1))).as("deleted"),
-        count(when(!isIns && col("__act") === -1, lit(1))).as("copied"),
-        count(when(isIns, lit(1))).as("inserted"))
+    val written = PlanBridge.fromInternalRows(spark, counted, all.schema)
       .filter(isIns || !isAct(deleteIdxs))
       .select((schemaCols.map(f => when(isIns, insertValue(f))
           .otherwise(updateValue(f)).as(f.name)) ++
@@ -365,6 +384,6 @@ private[sources] object MergeClauses {
       updatedPost = updated
         .select(schemaCols.map(f => updateValue(f).as(f.name)): _*),
       deletedOld = target.filter(isAct(deleteIdxs)).select(oldCols: _*),
-      observation)
+      tally)
   }
 }

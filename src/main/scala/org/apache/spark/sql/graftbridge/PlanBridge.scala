@@ -14,9 +14,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * over manifest tables into runnable commands) needs both directions:
   * wrap an analyzer-resolved source plan as a DataFrame for the lake
   * API, and splice a DataFrame's analyzed plan back into the tree being
-  * resolved. The MERGE passes also need a plan's executed RDD and a
-  * frame over kept rows, and the optimizer's size estimate.
-  * Same one-file-adapter pattern as [[ColumnBridge]]. */
+  * resolved. The MERGE passes also need a plan's executed RDD (with or
+  * without adaptive execution) and a frame over kept rows. Same
+  * one-file-adapter pattern as [[ColumnBridge]]. */
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -38,16 +38,21 @@ object PlanBridge {
       .withNewExecutionId(qe, Some("toRdd"))(qe.toRdd)
   }
 
+  /** The RDD of `df`'s plan prepared without adaptive execution, so
+    * its shuffles stay stage boundaries inside the one job that reads
+    * the RDD (adaptive execution runs each shuffle as a job of its
+    * own). Its rows are reused buffers, as [[internalRows]]'. */
+  def oneJobRows(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution
+    org.apache.spark.sql.execution.QueryExecution
+      .prepareExecutedPlan(qe.sparkSession, qe.optimizedPlan).execute()
+  }
+
   /** A frame over `rows` whose schema is `schema`. */
   def fromInternalRows(spark: SparkSession, rows: RDD[InternalRow],
                        schema: org.apache.spark.sql.types.StructType)
       : DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming = false)
-
-  /** The optimizer's size estimate of `df`: exact for a materialized
-    * cached frame. */
-  def sizeInBytes(df: DataFrame): BigInt =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.optimizedPlan.stats.sizeInBytes
 }

@@ -79,7 +79,7 @@ class MergeJobsSpec extends AnyFunSuite with Matchers with SparkSpec
   private trait Fmt {
     def name: String
     def table: String
-    def create(): Unit
+    def create(df: DataFrame = initial): Unit
     def version(): Long
     /** (rowsAffected, rewritten files); the lake reports no row count. */
     def merge(src: DataFrame): (Option[Long], Int)
@@ -96,8 +96,8 @@ class MergeJobsSpec extends AnyFunSuite with Matchers with SparkSpec
 
   private final class Lake(val table: String) extends Fmt {
     val name = "lake"
-    def create(): Unit = ManifestLake.write(initial, table, append = false,
-      statsCol = Some("key"))
+    def create(df: DataFrame): Unit = ManifestLake.write(df, table,
+      append = false, statsCol = Some("key")): Unit
     def version(): Long = ManifestLake.currentVersion(spark, table).get
     def merge(src: DataFrame): (Option[Long], Int) = {
       val v = ManifestLake.mergeApply(src, table, Seq("key"), matchedClauses,
@@ -118,8 +118,8 @@ class MergeJobsSpec extends AnyFunSuite with Matchers with SparkSpec
 
   private final class Delta(val table: String) extends Fmt {
     val name = "delta"
-    def create(): Unit = {
-      DeltaInterop.write(initial, table)
+    def create(df: DataFrame): Unit = {
+      DeltaInterop.write(df, table)
       DeltaInterop.enableChangeDataFeed(spark, table): Unit
     }
     def version(): Long = DeltaInterop.currentVersion(spark, table).get
@@ -150,8 +150,8 @@ class MergeJobsSpec extends AnyFunSuite with Matchers with SparkSpec
 
   private final class Iceberg(val table: String) extends Fmt {
     val name = "iceberg"
-    def create(): Unit = {
-      IcebergInterop.write(initial, table)
+    def create(df: DataFrame): Unit = {
+      IcebergInterop.write(df, table)
       IcebergInterop.upgradeFormat(spark, table, 2): Unit
     }
     def version(): Long = IcebergInterop.snapshotLineage(spark, table).last
@@ -348,5 +348,73 @@ class MergeJobsSpec extends AnyFunSuite with Matchers with SparkSpec
         post shouldBe landed
       }
     }
+  }
+
+  test("the source summary groups keys as groupBy does: nested floats, " +
+    "collated strings") {
+    import org.apache.spark.sql.functions.{count, struct}
+    val negZero = -0.0
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val nested = spark.createDataFrame(Seq((0.0, 1), (negZero, 2),
+        (Double.NaN, 3), (otherNaN, 4), (1.5, 5)))
+      .select(struct(col("_1").as("d")).as("k"), col("_2").as("v"))
+    val collated = spark.sql("SELECT collate(c, 'UTF8_LCASE') AS k, 1 AS v " +
+      "FROM VALUES ('a'), ('A'), ('b') AS t(c)")
+    val distinct = spark.createDataFrame(Seq((3L, 1), (1L, 2), (2L, 3)))
+      .toDF("k", "v")
+    for ((src, dup) <- Seq(nested -> true, collated -> true,
+        distinct -> false)) {
+      src.groupBy("k").agg(count(lit(1)).as("n")).filter(col("n") > 1)
+        .isEmpty shouldBe !dup
+      val stmt = new MergeClauses.Statement(src)
+      try {
+        val summary = MergeClauses.summarize(stmt, Seq("k"))
+        summary.duplicate.isDefined shouldBe dup
+        summary.rows shouldBe src.count()
+      } finally stmt.release()
+    }
+    val stmt = new MergeClauses.Statement(distinct)
+    try MergeClauses.summarize(stmt, Seq("k")).bounds shouldBe
+      Map("k" -> Some(("1", "3")))
+    finally stmt.release()
+  }
+
+  test("target rows sharing a key: the probe measures every matched row, " +
+    "and a MERGE over them stays exact without a broadcast of them") {
+    val dir = fresh()
+    // 2,000 target rows over 5 keys; the source updates those 5 keys and
+    // inserts 5 more
+    val shared = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0L until 2000L).map(i => row(i % 5, 1)), 4), schema)
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0L until 5L).map(k => Row.fromSeq(row(k, 7).toSeq :+ "U")) ++
+        (100L until 105L).map(k => Row.fromSeq(row(k, 9).toSeq :+ "I")),
+      1), schema.add("_op", StringType))
+    val stmt = new MergeClauses.Statement(src)
+    try {
+      val pr = MergeClauses.probe(stmt,
+        shared.select(col("key"), lit("f").as("__f")), "__f", Seq("key"))
+      pr.files shouldBe Set("f")
+      pr.matchedKeys.count() shouldBe 2000L
+      // each kept row holds at least its 8-byte key
+      pr.matchedBytes should be >= 2000L * 8
+    } finally stmt.release()
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "4096")
+    try for (f <- formats(dir)) {
+      f.create(shared)
+      val (affected, _) = f.merge(src)
+      affected.foreach(_ shouldBe 2005L)
+      f.count() shouldBe 2005L
+      val read = f match {
+        case l: Lake => ManifestLake.read(spark, l.table)
+        case d: Delta => DeltaInterop.read(spark, d.table)
+        case i: Iceberg => IcebergInterop.read(spark, i.table)
+      }
+      read.filter(col("num_bikes") === 7).count() shouldBe 2000L
+      read.filter(col("num_bikes") === 9).count() shouldBe 5L
+    } finally saved.fold(spark.conf.unset(threshold))(
+      spark.conf.set(threshold, _))
   }
 }
