@@ -33,6 +33,15 @@ object GraftSession {
     * every human use of explain intact and bounds the waste. */
   private val PlanStringCap = (1024 * 1024).toString
 
+  /** Sample points per output partition of a range exchange
+    * (`repartitionByRange`, the clustered writes, global sorts). Spark
+    * seeds the sample from the RDD id, so a sampled bound depends on how
+    * many RDDs the JVM made before. Spark's default of 100 samples every
+    * row only of inputs up to 300 rows per output partition; 1,000
+    * raises that to 3,000, so a clustered write of a small table gets
+    * exact, reproducible file ranges. Larger inputs are still sampled. */
+  private val RangeSamplePoints = "1000"
+
   /** Number of local cores: SPARK_GRAFT_CPUS env, else all available. */
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -49,6 +58,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.maxPlanStringLength", PlanStringCap)
+      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition",
+        RangeSamplePoints)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -88,6 +99,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.maxPlanStringLength", PlanStringCap)
+      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition",
+        RangeSamplePoints)
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
     s3a.map(s3aConfMap).getOrElse(Map.empty)

@@ -84,25 +84,25 @@ private[sources] object MergeClauses {
     val types = keyCols.indices.map(grouped.schema(_).dataType)
     val ni = keyCols.size
     val parts = PlanBridge.oneJobRows(grouped).mapPartitions { it =>
-        val ords = types.map(TypeUtils.getInterpretedOrdering)
-        val lo = new Array[Any](ni)
-        val hi = new Array[Any](ni)
-        var rows = 0L
-        var dup: Option[InternalRow] = None
-        it.foreach { k =>
-          val n = k.getLong(ni)
-          rows += n
-          if (n > 1 && dup.isEmpty) dup = Some(k.copy())
-          types.indices.foreach { i =>
-            if (!k.isNullAt(i)) {
-              val v = InternalRow.copyValue(k.get(i, types(i)))
-              if (lo(i) == null || ords(i).lt(v, lo(i))) lo(i) = v
-              if (hi(i) == null || ords(i).gt(v, hi(i))) hi(i) = v
-            }
+      val ords = types.map(TypeUtils.getInterpretedOrdering)
+      val lo = new Array[Any](ni)
+      val hi = new Array[Any](ni)
+      var rows = 0L
+      var dup: Option[InternalRow] = None
+      it.foreach { k =>
+        val n = k.getLong(ni)
+        rows += n
+        if (n > 1 && dup.isEmpty) dup = Some(k.copy())
+        types.indices.foreach { i =>
+          if (!k.isNullAt(i)) {
+            val v = InternalRow.copyValue(k.get(i, types(i)))
+            if (lo(i) == null || ords(i).lt(v, lo(i))) lo(i) = v
+            if (hi(i) == null || ords(i).gt(v, hi(i))) hi(i) = v
           }
         }
-        Iterator((rows, dup, lo.toSeq, hi.toSeq))
-      }.collect()
+      }
+      Iterator((rows, dup, lo.toSeq, hi.toSeq))
+    }.collect()
     val ords = types.map(TypeUtils.getInterpretedOrdering)
     val zone = grouped.sparkSession.sessionState.conf.sessionLocalTimeZone
     def render(v: Any, i: Int): String =
@@ -241,9 +241,10 @@ private[sources] object MergeClauses {
     * a source row whose key is not among them is NOT MATCHED (the
     * insert anti-join broadcasts them when the probe measured them
     * within the broadcast threshold). The join is on the key alone
-    * and `scope` decides whether a key-equal row is MATCHED (SQL ON semantics: a key-equal row failing the scope is
-    * not); NMBS clauses fire on matchless rows inside the scope
-    * (everywhere, when `effectiveFullTable`). The join and the fired
+    * and `scope` decides whether a key-equal row is MATCHED (SQL ON
+    * semantics: a key-equal row failing the scope is not); NMBS
+    * clauses fire on matchless rows inside the scope (everywhere, when
+    * `effectiveFullTable`). The join and the fired
     * inserts run now as far as their broadcasts; their rows compute in
     * the first job that reads them, and `keep` holds them for the
     * statement's later jobs (the change-feed write) instead of

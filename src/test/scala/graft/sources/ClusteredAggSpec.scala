@@ -114,4 +114,23 @@ class ClusteredAggSpec extends AnyFunSuite with Matchers with SparkSpec {
     lo.intersect(hi) shouldBe empty
     (lo.size + hi.size) should be < snap.files.size
   }
+
+  test("a small clustered write's file ranges are exact and do not depend " +
+    "on how many RDDs the session made before it") {
+    import spark.implicits._
+    val rows = (1 to 16000).map(i => (i.toLong, i % 7)).toDF("id", "grp")
+    def ranges(): Seq[(BigDecimal, BigDecimal)] = {
+      val t = java.nio.file.Files
+        .createTempDirectory("graft-mlake-ranges").toString + "/t"
+      ManifestLake.writeClustered(rows, t, "id", nFiles = 16)
+      ManifestLake.snapshot(spark, t).entries.flatMap(_.range("id"))
+        .map(r => (r.min, r.max)).sortBy(_._1)
+    }
+    val first = ranges()
+    // the range exchange seeds its sample from the RDD id
+    (1 to 37).foreach(_ => spark.sparkContext.emptyRDD[Int])
+    ranges() shouldBe first
+    first shouldBe (0 until 16).map(k =>
+      (BigDecimal(k * 1000 + 1), BigDecimal((k + 1) * 1000)))
+  }
 }
