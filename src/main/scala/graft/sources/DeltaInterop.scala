@@ -2355,12 +2355,12 @@ object DeltaInterop {
     * matched keys; one left join of the rewritten files' rows with
     * the source, unioned with the inserts (the source rows anti-joined
     * with the kept matched keys), feeds the data write, the CDC write
-    * and the row counts (taken by the data write as it reads). The NMBS
-    * scope prunes on recorded stats/partition values before one
-    * anti-join scan finds clause-fired files; ONLY files holding a
-    * fired row rewrite. AQE broadcasts a small source. On a 20,000-row,
-    * 4-file table with CDF on and a 200-row change batch that is 9
-    * Spark jobs (`MergeJobsSpec`). */
+    * and the row counts, which the data write takes as it reads the
+    * rows. The NMBS scope prunes on recorded stats/partition values
+    * before one anti-join scan finds clause-fired files; ONLY files
+    * holding a fired row rewrite. AQE broadcasts a small source. On a
+    * 20,000-row, 4-file table with CDF on and a 200-row change batch
+    * that is 9 Spark jobs (`MergeJobsSpec`). */
   def mergeApply(source: DataFrame, table: String, keyCols: Seq[String],
                  matched: Seq[ManifestLake.MergeMatched],
                  notMatched: Seq[ManifestLake.MergeInsert] = Nil,
